@@ -10,8 +10,8 @@ The Spark-side counterpart of the reference's `wvlet` CLI
     python -m wvlet_spark repl --table-dir /data/sf0.1
 
 `compile` and `to-wvlet` are pure compiler calls — no SparkSession, no
-JVM startup.  `run`/`repl` build a local session sized from
-$SPARK_GRAFT_CPUS (default all cores).
+JVM startup, and neither pyspark nor pandas is imported.  `run`/`repl`
+build a local session sized from $SPARK_GRAFT_CPUS (default all cores).
 """
 
 from __future__ import annotations

@@ -36,146 +36,70 @@ _OPERATORS = [
     ",", ";", ":", ".", "?", "$", "@", "!", "#", "|",
 ]
 
-_OP_RE = re.compile("|".join(re.escape(op) for op in _OPERATORS))
-
-_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
-_NUM_RE = re.compile(
-    r"""
-    (?P<float>(?:\d+\.\d+(?:[eE][+-]?\d+)?|\d+[eE][+-]?\d+)[fF]?|\d+[fF])
-  | (?P<int>\d+)
-    """,
-    re.VERBOSE,
-)
-_WS_RE = re.compile(r"[ \t\r\n]+")
-_LINE_COMMENT_RE = re.compile(r"--[^\n]*")
-_DOC_COMMENT_RE = re.compile(r"---.*?---", re.DOTALL)
-_DURATION_RE = re.compile(r"\d+(?:\.\d+)?(ms|s|m|h|d|w)\b")
+# One pattern tried once per position.  Alternatives are tried in order, so
+# earlier ones win (`s"` is a string, not the identifier `s`).  Group names
+# in upper case are token kinds; the others open a construct scanned below.
+_TOKEN_RE = re.compile(r"""
+    (?P<skip>[ \t\r\n]+ | (?s:---.*?---) | --[^\n]*)
+  | (?P<block>/\*)
+  | (?P<bq>s?`)
+  | (?P<string>(?:sql|s)?"|')
+  | (?P<DURATION>\d+(?:\.\d+)?(?:ms|s|m|h|d|w)\b)
+  | (?P<FLOAT>(?:\d+\.\d+(?:[eE][+-]?\d+)?|\d+[eE][+-]?\d+)[fF]?|\d+[fF])
+  | (?P<INT>\d+)
+  | (?P<IDENT>[A-Za-z_][A-Za-z0-9_]*)
+  | (?P<OP>""" + "|".join(re.escape(op) for op in _OPERATORS) + ")",
+    re.VERBOSE)
+_STRING_KINDS = {"": "STRING", "s": "INTERP_STRING", "sql": "SQL_STRING"}
+_ESCAPES = {"n": "\n", "t": "\t", "r": "\r", "\\": "\\", '"': '"', "'": "'"}
 
 
 def tokenize(text: str) -> list[Token]:
     tokens: list[Token] = []
-    pos = 0
-    n = len(text)
-    line = 1
-    line_start = 0
-
-    def cur_col(p: int) -> int:
-        return p - line_start + 1
-
-    def advance_lines(s: str, start: int):
-        nonlocal line, line_start
-        idx = start
-        for m in re.finditer(r"\n", s):
-            line += 1
-            line_start = idx + m.end()
-
+    pos, n, line, line_start = 0, len(text), 1, 0
     while pos < n:
-        ch = text[pos]
-
-        m = _WS_RE.match(text, pos)
-        if m:
-            advance_lines(m.group(0), pos)
-            pos = m.end()
-            continue
-
-        m = _DOC_COMMENT_RE.match(text, pos)
-        if m:
-            advance_lines(m.group(0), pos)
-            pos = m.end()
-            continue
-
-        m = _LINE_COMMENT_RE.match(text, pos)
-        if m:
-            pos = m.end()
-            continue
-
-        # /* ... */ (and /** ... */) block comments
-        if text.startswith("/*", pos):
-            endc = text.find("*/", pos + 2)
-            if endc < 0:
-                raise WvletSyntaxError("unterminated block comment", line, cur_col(pos))
-            advance_lines(text[pos : endc + 2], pos)
-            pos = endc + 2
-            continue
-
-        # s`...${expr}...` — interpolated identifier (table/result names;
-        # reference: spec/basic/backquote-interpolation.wv)
-        if text.startswith("s`", pos):
-            endq = text.find("`", pos + 2)
+        col = pos - line_start + 1
+        m = _TOKEN_RE.match(text, pos)
+        if m is None:
+            raise WvletSyntaxError(f"unexpected character {text[pos]!r}", line, col)
+        kind, end = m.lastgroup, m.end()
+        if kind == "bq":
+            # `name` and s`...${expr}...` (interpolated table/result names;
+            # reference: spec/basic/backquote-interpolation.wv)
+            interp = end - pos == 2
+            endq = text.find("`", end)
             if endq < 0:
-                raise WvletSyntaxError("unterminated interpolated identifier",
-                                      line, cur_col(pos))
-            tokens.append(Token("INTERP_BQIDENT", text[pos + 2 : endq], line, cur_col(pos)))
+                what = "interpolated" if interp else "backquoted"
+                raise WvletSyntaxError(f"unterminated {what} identifier", line, col)
+            tokens.append(Token("INTERP_BQIDENT" if interp else "BQIDENT",
+                                text[end:endq], line, col))
             pos = endq + 1
             continue
-
-        # string prefixes: s"...", sql"..." (each also with """ bodies)
-        if text.startswith('s"', pos) or text.startswith("sql\"", pos):
-            prefix = "sql" if text.startswith("sql\"", pos) else "s"
-            kind = "SQL_STRING" if prefix == "sql" else "INTERP_STRING"
-            start = pos + len(prefix)
-            if text.startswith('"""', start):
-                body, end = _scan_triple(text, start, line, cur_col(pos))
+        if kind == "block":  # /* ... */ (and /** ... */)
+            end = text.find("*/", end) + 2
+            if end < 2:
+                raise WvletSyntaxError("unterminated block comment", line, col)
+        elif kind == "string":
+            # '...', "...", """...""", and the s"..." / sql"..." prefixes
+            opener = m.group()
+            kind = _STRING_KINDS[opener[:-1]]
+            if text.startswith('"""', end - 1):
+                body, end = _scan_triple(text, end - 1, line, col)
+                kind = "TSTRING" if kind == "STRING" else kind
             else:
-                body, end = _scan_quoted(text, start, '"', line, cur_col(pos))
-            tokens.append(Token(kind, body, line, cur_col(pos)))
-            advance_lines(text[pos:end], pos)
+                body, end = _scan_quoted(text, end - 1, opener[-1], line, col)
+            tokens.append(Token(kind, body, line, col))
+        elif kind != "skip":
+            tokens.append(Token(kind, m.group(), line, col))
             pos = end
             continue
-
-        if text.startswith('"""', pos):
-            body, end = _scan_triple(text, pos, line, cur_col(pos))
-            tokens.append(Token("TSTRING", body, line, cur_col(pos)))
-            advance_lines(text[pos:end], pos)
-            pos = end
-            continue
-
-        if ch == '"' or ch == "'":
-            body, end = _scan_quoted(text, pos, ch, line, cur_col(pos))
-            # single-quoted and double-quoted are both string literals in wvlet
-            tokens.append(Token("STRING", body, line, cur_col(pos)))
-            advance_lines(text[pos:end], pos)
-            pos = end
-            continue
-
-        if ch == "`":
-            endq = text.find("`", pos + 1)
-            if endq < 0:
-                raise WvletSyntaxError("unterminated backquoted identifier", line, cur_col(pos))
-            tokens.append(Token("BQIDENT", text[pos + 1 : endq], line, cur_col(pos)))
-            pos = endq + 1
-            continue
-
-        if ch.isdigit():
-            # duration literal 5m / 30s / 100ms / 2h / 1d (flow DSL)
-            m = _DURATION_RE.match(text, pos)
-            if m:
-                tokens.append(Token("DURATION", m.group(0), line, cur_col(pos)))
-                pos = m.end()
-                continue
-            m = _NUM_RE.match(text, pos)
-            if m.group("float"):
-                tokens.append(Token("FLOAT", m.group(0), line, cur_col(pos)))
-            else:
-                tokens.append(Token("INT", m.group(0), line, cur_col(pos)))
-            pos = m.end()
-            continue
-
-        m = _IDENT_RE.match(text, pos)
-        if m:
-            tokens.append(Token("IDENT", m.group(0), line, cur_col(pos)))
-            pos = m.end()
-            continue
-
-        m = _OP_RE.match(text, pos)
-        if m:
-            tokens.append(Token("OP", m.group(0), line, cur_col(pos)))
-            pos = m.end()
-            continue
-
-        raise WvletSyntaxError(f"unexpected character {ch!r}", line, cur_col(pos))
-
-    tokens.append(Token("EOF", "", line, cur_col(pos)))
+        # comments, whitespace and strings may span lines
+        nl = text.count("\n", pos, end)
+        if nl:
+            line += nl
+            line_start = text.rfind("\n", pos, end) + 1
+        pos = end
+    tokens.append(Token("EOF", "", line, pos - line_start + 1))
     return tokens
 
 
@@ -203,8 +127,7 @@ def _scan_quoted(text: str, start: int, quote: str, line: int, col: int) -> tupl
         c = text[i]
         if c == "\\" and i + 1 < n:
             nxt = text[i + 1]
-            mapping = {"n": "\n", "t": "\t", "r": "\r", "\\": "\\", '"': '"', "'": "'"}
-            out.append(mapping.get(nxt, "\\" + nxt))
+            out.append(_ESCAPES.get(nxt, "\\" + nxt))
             i += 2
             continue
         if c == quote:

@@ -43,12 +43,14 @@ class Parser:
         self.text = text
         self.tokens = tokenize(text)
         self.pos = 0
+        self._eof = len(self.tokens) - 1
 
     # -- token helpers ------------------------------------------------------
 
     def peek(self, offset: int = 0) -> Token:
-        i = min(self.pos + offset, len(self.tokens) - 1)
-        return self.tokens[i]
+        # the parser's hottest call: an index past the end reads EOF
+        i = self.pos + offset
+        return self.tokens[i if i < self._eof else self._eof]
 
     def at_kw(self, *words: str, offset: int = 0) -> bool:
         t = self.peek(offset)

@@ -55,8 +55,10 @@ class WvletSession:
         self._connectors: dict[str, object] = {}
         self._conn_staged: dict[str, str] = {}   # connector -> staged view
         self._profiles: dict[str, object] = {}   # prefix -> table resolver
+        # register_tool entries; the built-ins join on the first `call`, so
+        # compiling never imports the operator library (pandas, pyspark.sql)
         self._tools: dict[str, object] = {}
-        self._register_builtin_tools()
+        self._builtin_tools_loaded = False
         self.last_test_results: list[tuple[bool, str]] = []
         if spark is not None:
             try:
@@ -816,6 +818,13 @@ class WvletSession:
         if isinstance(stmt, N.RunFlowStmt):
             return self._run_flow(stmt)
         if isinstance(stmt, N.CallToolStmt):
+            if not self._builtin_tools_loaded:
+                registered, self._tools = self._tools, {}
+                try:
+                    self._register_builtin_tools()
+                finally:
+                    self._tools.update(registered)  # registered names win
+                self._builtin_tools_loaded = True
             if stmt.name not in self._tools:
                 raise CompileError(f"unknown tool: {stmt.name}")
             kwargs = {}

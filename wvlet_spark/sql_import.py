@@ -24,6 +24,7 @@ import contextvars
 import copy
 import json
 import re
+import threading
 import warnings
 
 from wvlet_spark.generator import CompileError
@@ -109,16 +110,29 @@ _AGG_FNS = {
 }
 
 
+# One parser connection for the process, opened on first use; parsing
+# leaves no state in it.  Opening and closing a connection per statement
+# cost ~9 ms of its ~11 ms conversion (a default connection starts one
+# worker thread per core); `threads: 1` starts none.  The lock serializes
+# the server's request threads on it.
+_PARSER = None
+_PARSER_LOCK = threading.Lock()
+
+
 def parse_sql(sql: str) -> dict:
     """SQL text -> DuckDB's serialized AST (raises on parse error)."""
-    import duckdb
+    global _PARSER
+    if "\x00" in sql:  # DuckDB's parser stops at a NUL character
+        raise SqlImportError("SQL parse error: NUL character in statement")
+    # a quoted literal, not a bound parameter: binding makes DuckDB import
+    # pandas and numpy on first use
+    query = "select json_serialize_sql('" + sql.replace("'", "''") + "')"
+    with _PARSER_LOCK:
+        if _PARSER is None:
+            import duckdb
 
-    con = duckdb.connect()
-    try:
-        raw = con.execute(
-            "select json_serialize_sql(?::VARCHAR)", [sql]).fetchone()[0]
-    finally:
-        con.close()
+            _PARSER = duckdb.connect(config={"threads": 1})
+        raw = _PARSER.execute(query).fetchone()[0]
     ast = json.loads(raw)
     if ast.get("error"):
         raise SqlImportError(
@@ -3199,8 +3213,12 @@ def _constant(v: dict) -> str:
     if v.get("is_null"):
         return "null"
     val = v.get("value")
+    if isinstance(val, dict):
+        # 128-bit values (HUGEINT, UHUGEINT, DECIMAL wider than 18 digits)
+        # serialize as two 64-bit halves: upper * 2**64 + lower
+        val = (val["upper"] << 64) + val["lower"]
     if tid in ("INTEGER", "BIGINT", "SMALLINT", "TINYINT", "HUGEINT",
-               "UINTEGER", "UBIGINT"):
+               "UHUGEINT", "UINTEGER", "UBIGINT"):
         return str(val)
     if tid == "DECIMAL":
         info = v["type"]["type_info"]
@@ -3210,10 +3228,15 @@ def _constant(v: dict) -> str:
         if scale == 0:
             return f"{neg}{s}"
         s = s.rjust(scale + 1, "0")
+        lit = f"{neg}{s[:-scale]}.{s[-scale:]}"
+        if width > 18:
+            # a double literal keeps ~17 significant digits; a string
+            # casts to the decimal exactly
+            lit = f"'{lit}'"
         # keep the exact decimal type: a bare 0.06 literal lexes as double
         # in wvlet and float-folds (0.06 - 0.01 != 0.05 in binary), while
         # SQL semantics here are exact decimal arithmetic
-        return f"{neg}{s[:-scale]}.{s[-scale:]}::decimal({width},{scale})"
+        return f"{lit}::decimal({width},{scale})"
     if tid in ("DOUBLE", "FLOAT"):
         return repr(float(val))
     if tid == "BOOLEAN":
