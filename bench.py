@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may use), in the
+engine's Spark configuration (wvlet_spark/config.py).  Prints ONE JSON line:
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 value = total wall time of one full pass over the headline query set
@@ -37,6 +38,10 @@ import subprocess
 import sys
 import time
 
+# perfbench and the timing tools build their session as bench._make_spark
+from wvlet_spark.config import default_cpus
+from wvlet_spark.config import make_spark as _make_spark
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 
 HEADLINE = [
@@ -52,61 +57,6 @@ HEADLINE = [
 
 REPEATS = int(os.environ.get("SPARK_GRAFT_REPEATS", "3"))
 CANARY_TOLERANCE = 1.5
-
-
-def _knobs(sf_dir: str, cpus: int) -> tuple[int, int, int, bool]:
-    """Scale-aware Spark knobs (see round-2 measurements in SCALE.md §8).
-
-    Toy inputs (< ~16 MB per core, e.g. the 17 MB sf0.1 gate data) are
-    dominated by per-task scheduling and shuffle setup: coarse 128 MB
-    splits + eager 64 MB broadcast + few shuffle buckets win there
-    (measured 15s vs 32s at sf0.1).  At real scale fine data/(cores*3)
-    split sizing and the 10 MB broadcast default win instead (64 MB made
-    Spark broadcast million-row tables off parquet-size estimates: 3-5x
-    slower joins at sf1; AQE still upgrades small sides at runtime).
-    """
-    try:
-        total_bytes = sum(
-            os.path.getsize(os.path.join(sf_dir, f))
-            for f in os.listdir(sf_dir) if f.endswith(".parquet"))
-    except OSError:
-        total_bytes = 0
-    # The toy branch must capture ONLY overhead-dominated inputs (sf0.1 is
-    # 17 MB): at 178 MB (sf1) the 64 MB broadcast threshold makes Spark
-    # broadcast million-row tables and 8 shuffle buckets under-parallelize
-    # 32 cores (measured 55s vs ~21s for the sf1 suite).
-    if total_bytes < 64 * 1024 * 1024:
-        # AQE buys nothing here (every join already broadcasts under the
-        # 64 MB threshold, nothing to re-plan) and its per-stage
-        # materialization barriers cost ~50-150 ms per exchange on warm
-        # runs (warm-path A/B: suite 11.3 -> 9.8 s; cold min-of-3 through
-        # this harness measures neutral, 8.97 vs 8.91 s).  Off for the
-        # toy branch; the real-scale branch keeps AQE on (skew joins,
-        # runtime re-planning — the 100 TB posture).  SPARK_GRAFT_AQE
-        # overrides either branch.
-        max_part, bcast, shuffle = 128, 64, 8
-        aqe = False
-    else:
-        # clamp low enough that a single ~100 MB parquet file still scans
-        # ~cores-wide (splits are maxPartitionBytes byte ranges over row
-        # groups); the 1 MB openCost keeps tiny files from over-splitting
-        max_part = min(128, max(4, (total_bytes // (cpus * 3)) >> 20))
-        # shuffle partitions scale with DATA, not just cores: cores-wide
-        # buckets at sf100 (17 GB, 600 M lineitem) put ~19 M aggregation
-        # groups in one task's hash state and starved the JVM (GCLocker
-        # retry OOM, round-6 measured).  One bucket per ~128 MB of input
-        # (round-7: q21-on 62.0 -> 33.9 s at sf100, min-of-2 interleaved
-        # isolated JVMs — the 30 GB self-join spills at 256 MB buckets;
-        # AQE coalesces the excess for small stages).  Below ~4 GB this
-        # stays cores-wide — earlier-round sf<=10 measurements hold.
-        bcast = 10
-        shuffle = max(max(8, cpus), min(256, int(total_bytes) >> 27))
-        aqe = True
-    max_part = int(os.environ.get("SPARK_GRAFT_MAXPART_MB", max_part))
-    bcast = int(os.environ.get("SPARK_GRAFT_BCAST_MB", bcast))
-    shuffle = int(os.environ.get("SPARK_GRAFT_SHUFFLE", shuffle))
-    aqe = os.environ.get("SPARK_GRAFT_AQE", "1" if aqe else "0") == "1"
-    return max_part, bcast, shuffle, aqe
 
 
 def _oracles_for(names: list[str]) -> dict[str, str]:
@@ -252,7 +202,7 @@ def _measure_spark(spark, sf_dir: str, names: list[str],
         # Forcing a JVM GC between QUERIES (never inside a timed run)
         # lets the cleaner reap them.  This explicit flush is the ONLY
         # disk guard — periodicGC was measured and removed (see the
-        # _make_spark note: 2min intervals fired 96 g-heap GC pauses
+        # wvlet_spark/config.py note: 2min intervals fired 96 g-heap GC pauses
         # inside timed runs).
         spark.sparkContext._jvm.System.gc()
 
@@ -286,54 +236,6 @@ def _measure_spark(spark, sf_dir: str, names: list[str],
         base = max(per_query[fastest], 1e-6)
         canary_ratio = round(min(rechecks) / base, 3)
     return per_query, canary_ratio
-
-
-def _make_spark(sf_dir: str, cpus: int):
-    from pyspark.sql import SparkSession
-
-    max_part, bcast, shuffle, aqe = _knobs(sf_dir, cpus)
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.sql.adaptive.enabled", str(aqe).lower())
-        .config("spark.sql.adaptive.coalescePartitions.enabled",
-                str(aqe).lower())
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        # e.g. -XX:+UseParallelGC: at sf100 (17 GB, 96 g heap) G1 hits
-        # GCLocker-starvation OOMs under 32-thread aggregation pressure
-        # and degrades mid-suite join times 3x; ParallelGC shows neither
-        # (round-6 A/B, SCALE.md §24)
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_GRAFT_DRIVER_OPTS", ""))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        # NB: do NOT set spark.cleaner.periodicGC.interval low here — a
-        # 2min interval fired full 96 g-heap GC pauses INSIDE timed runs
-        # (round-7 sf100 pass: with_cte and ext_exact_dedup each +7 s).
-        # The explicit flush_shuffles() between queries is the disk
-        # guard (blockmgr stayed <= 4 GB across the whole sf100 pass).
-        .config("spark.sql.files.maxPartitionBytes",
-                str(max_part * 1024 * 1024))
-        .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                str(bcast * 1024 * 1024))
-        # prefer shuffled-hash over sort-merge when the build side fits
-        # (guard: stats < threshold x shuffle.partitions, so huge inputs
-        # still SMJ): skips both sort passes — measured sf10 q21 8.7->4.5s,
-        # q3 3.6->2.2s, nothing regressed
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        # Arrow batch sizing for the pandas-UDF ops (minhash signatures,
-        # vector math): 40k rows/batch amortizes per-batch Python+numpy
-        # setup — measured sf10 signature pass 6.3->4.6s cold, 2.6->2.4s
-        # warm vs the 10k default; ~40MB/batch of text, well within
-        # worker memory
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "40000")
-        .appName("wvlet_spark-bench")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
 
 
 def _sf1_dir() -> str | None:
@@ -386,7 +288,7 @@ class _StealMonitor:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     sf_s = sf_dir.rstrip("/").split("sf")[-1]
     sf = float(sf_s) if sf_s.replace(".", "").isdigit() else sf_s
 

@@ -1,30 +1,21 @@
 import os
+import tempfile
 
 import pytest
 
+from wvlet_spark.config import default_cpus, make_spark
+
 SF_DIR = os.environ.get("WVLET_TEST_SF_DIR", "/root/testdata/sf0.01")
 SF_SMALL = os.environ.get("WVLET_TEST_SF_SMALL", "/root/testdata/sf0.001")
+CPUS = default_cpus()
 
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
-
-    import tempfile
-
+    """The engine's Spark configuration for the test tables, as users and
+    the benchmarks get it."""
     warehouse = tempfile.mkdtemp(prefix="wv_warehouse_")
-    s = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.warehouse.dir", warehouse)
-        .appName("wvlet_spark-tests")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
+    yield make_spark(SF_DIR, CPUS, warehouse_dir=warehouse)
 
 
 @pytest.fixture(scope="session")

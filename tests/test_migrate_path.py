@@ -50,7 +50,8 @@ def test_literal_sql_parses_as_bound_parameter(sql, monkeypatch):
     assert converted == sql_to_wvlet(sql)
 
 
-@pytest.mark.parametrize("sql", ["selec 1", "select 'open", "select 1\x00"])
+@pytest.mark.parametrize("sql", ["selec 1", "select 'open", "select 1\x00",
+                                 "select '\ud800'"])
 def test_bad_sql_raises_sql_import_error(sql):
     with pytest.raises(SqlImportError, match="SQL parse error"):
         sql_to_wvlet(sql)
@@ -109,6 +110,10 @@ def test_128_bit_constants():
     "select 12345678901234567890123 as a",
     "select -12345678901234567890123 as a",
     "select 1234567890123456789.0123456789012345678 as a",
+    # width <= 18, but more significant digits than a double keeps
+    "select 0.22734567890123456 as a",
+    "select -9.99999999999999999 as a",
+    "select 0.06 as a, 1.50 as b, 0.00001 as c",
 ])
 def test_128_bit_constants_round_trip_on_duckdb(sql):
     wv = sql_to_wvlet(sql)

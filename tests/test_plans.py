@@ -52,11 +52,12 @@ def test_q3_pushdown_pruning_broadcast(ws):
     # hot expressions stay inside whole-stage codegen spans (AQE hides the
     # spans pre-execution, so plan once with AQE off; `*(n)` marks a span)
     conf = ws.spark.conf
+    old = conf.get("spark.sql.adaptive.enabled")
     conf.set("spark.sql.adaptive.enabled", "false")
     try:
         cg = _plan(_suite_df(ws, "tpch_q3"), "simple")
     finally:
-        conf.set("spark.sql.adaptive.enabled", "true")
+        conf.set("spark.sql.adaptive.enabled", old)
     assert "*(1)" in cg
 
 

@@ -52,24 +52,12 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/wv/docs1000"
     repeats = int(os.environ.get("SPARK_GRAFT_REPEATS", "2"))
 
-    from pyspark.sql import SparkSession
+    from wvlet_spark.config import make_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    total = sum(os.path.getsize(os.path.join(sf_dir, f))
-                for f in os.listdir(sf_dir) if f.endswith(".parquet"))
-    # split the scan data/(cores*3) (same sizing bench.py uses at real
-    # scale) — the default 128 MB splits would scan this ~600 MB corpus
-    # with ~5 tasks on 32 cores
-    split = max(4 * 1024 * 1024, total // (cpus * 3))
-    spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", str(cpus * 2))
-             .config("spark.sql.files.maxPartitionBytes", str(split))
-             .config("spark.driver.memory", "48g")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .config("spark.ui.showConsoleProgress", "false")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    # the engine's scale branch splits the scan data/(cores*3) — the
+    # default 128 MB splits would scan this ~600 MB corpus with ~5 tasks
+    # on 32 cores
+    spark = make_spark(sf_dir)
 
     import __spark_entry__ as entry
 

@@ -1436,17 +1436,11 @@ def main():
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     from wvlet_spark import WvletSession
+    from wvlet_spark.config import make_spark
 
-    spark = (SparkSession.builder.master("local[8]")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.ui.enabled", "false")
-             .config("spark.ui.showConsoleProgress", "false")
-             .config("spark.driver.memory", "8g")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = make_spark(SF_DIR)
     ws = WvletSession(spark, table_dir=SF_DIR, test_mode=False)
     duck = duckdb.connect()
     for t in TABLES:

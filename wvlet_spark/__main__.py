@@ -10,8 +10,10 @@ The Spark-side counterpart of the reference's `wvlet` CLI
     python -m wvlet_spark repl --table-dir /data/sf0.1
 
 `compile` and `to-wvlet` are pure compiler calls — no SparkSession, no
-JVM startup, and neither pyspark nor pandas is imported.  `run`/`repl`
-build a local session sized from $SPARK_GRAFT_CPUS (default all cores).
+JVM startup, and neither pyspark nor pandas is imported.  `run`, `repl`
+and `serve` build a local session in the engine's Spark configuration
+(wvlet_spark/config.py), sized from --table-dir's input and from --cpus
+(default $SPARK_GRAFT_CPUS, else the CPUs this process may use).
 """
 
 from __future__ import annotations
@@ -30,22 +32,6 @@ def _read_input(args) -> str:
     return sys.stdin.read()
 
 
-def _make_spark(cpus: str):
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(8, int(cpus) if cpus.isdigit() else 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("wvlet-spark-cli")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
-
-
 def _print_result(df, limit: int) -> None:
     from wvlet_spark.printer import render_box
 
@@ -61,9 +47,10 @@ def _print_result(df, limit: int) -> None:
 
 def cmd_run(args) -> int:
     from wvlet_spark import WvletSession
+    from wvlet_spark.config import make_spark
 
     text = _read_input(args)
-    spark = _make_spark(args.cpus)
+    spark = make_spark(args.table_dir, args.cpus)
     ws = WvletSession(spark, table_dir=args.table_dir,
                       file_base=args.file_base
                       or (os.path.dirname(os.path.abspath(args.file))
@@ -91,9 +78,10 @@ def cmd_to_wvlet(args) -> int:
 
 def cmd_serve(args) -> int:
     from wvlet_spark import WvletSession
+    from wvlet_spark.config import make_spark
     from wvlet_spark.server import serve
 
-    spark = _make_spark(args.cpus)
+    spark = make_spark(args.table_dir, args.cpus)
     ws = WvletSession(spark, table_dir=args.table_dir, test_mode=True)
     serve(ws, host=args.host, port=args.port)
     return 0
@@ -101,10 +89,11 @@ def cmd_serve(args) -> int:
 
 def cmd_repl(args) -> int:
     from wvlet_spark import WvletSession
+    from wvlet_spark.config import make_spark
     from wvlet_spark.generator import CompileError
     from wvlet_spark.lexer import WvletSyntaxError
 
-    spark = _make_spark(args.cpus)
+    spark = make_spark(args.table_dir, args.cpus)
     ws = WvletSession(spark, table_dir=args.table_dir, test_mode=True)
     print("wvlet-spark repl — blank line runs the buffer, Ctrl-D exits")
     buf: list[str] = []
@@ -136,8 +125,7 @@ def main(argv: list[str] | None = None) -> int:
             sp.add_argument("--table-dir", default=os.environ.get(
                 "SPARK_GRAFT_SF_DIR"), help="dir of <table>.parquet views")
             sp.add_argument("--file-base", default=None)
-            sp.add_argument("--cpus", default=os.environ.get(
-                "SPARK_GRAFT_CPUS", "*"))
+            sp.add_argument("--cpus", type=int, default=None)
             sp.add_argument("--limit", type=int, default=40,
                             help="max rows printed (reference default)")
 
@@ -161,14 +149,14 @@ def main(argv: list[str] | None = None) -> int:
 
     sp = sub.add_parser("serve", help="HTTP query server (FrontendApi)")
     sp.add_argument("--table-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
-    sp.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "*"))
+    sp.add_argument("--cpus", type=int, default=None)
     sp.add_argument("--host", default="127.0.0.1")
     sp.add_argument("--port", type=int, default=8080)
     sp.set_defaults(fn=cmd_serve)
 
     sp = sub.add_parser("repl", help="interactive session")
     sp.add_argument("--table-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR"))
-    sp.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "*"))
+    sp.add_argument("--cpus", type=int, default=None)
     sp.add_argument("--limit", type=int, default=40)
     sp.set_defaults(fn=cmd_repl)
 

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
@@ -12,7 +11,7 @@ from pyspark.sql import DataFrame
 # per task keeps toy-scale graded runs from paying 32 task launches for
 # 5 k rows; production note: on a real cluster inputs arrive well-split
 # and the guard is a no-op, so this knob only shapes small-input runs.
-_MAP_TASK_MB = float(os.environ.get("SPARK_GRAFT_MAP_TASK_MB", "1"))
+_MAP_TASK_MB = 1
 
 # (application id, semantic plan hash) -> (scan partition count,
 # footer-estimated plan bytes).  The probe
@@ -64,8 +63,7 @@ def probe_vector_dim(df: DataFrame, vec_col: str) -> int:
 # single job.  Above the threshold the measured round-6 behavior holds
 # (lazy candidate lineage re-ran a 5 M-doc banded self-join: verify 147 s
 # lazy vs 12 s materialized, SCALE.md §29) so checkpoints stay ON.
-_MATERIALIZE_MIN_MB = float(
-    os.environ.get("SPARK_GRAFT_MATERIALIZE_MIN_MB", "32"))
+_MATERIALIZE_MIN_MB = 32
 
 _PLAN_BYTES_CACHE: "OrderedDict[tuple[str, int], int | None]" = OrderedDict()
 
@@ -198,9 +196,9 @@ def ensure_map_parallelism(df: DataFrame, min_fraction: float = 2.0,
     splits than 2x cores and this remains a no-op.
 
     The repartition WIDTH is data-derived, not a constant (round-9, guide
-    §2 "make partitioning scale-adaptive"): one task per
-    $SPARK_GRAFT_MAP_TASK_MB (default 1 MB) of the plan's estimated input
-    bytes, capped at defaultParallelism.  A 17 MB toy input no longer
+    §2 "make partitioning scale-adaptive"): one task per _MAP_TASK_MB
+    (1 MB) of the plan's estimated input bytes, capped at
+    defaultParallelism.  A 17 MB toy input no longer
     fans a 5 k-row map into 32 near-empty tasks (per-task launch overhead
     dominated every sub-second op in the round-9 sweep), while anything
     >= cores x 1 MB still widens to all cores — the measured sf10
@@ -238,7 +236,7 @@ def ensure_map_parallelism(df: DataFrame, min_fraction: float = 2.0,
         return df
     target = cap
     if not wide and est_bytes is not None and est_bytes >= 0:
-        per_task = max(1, int(_MAP_TASK_MB * 1024 * 1024))
+        per_task = _MAP_TASK_MB * 1024 * 1024
         target = min(cap, max(1, -(-est_bytes // per_task)))
     if nparts < max(1, int(target * min_fraction)):
         return df.repartition(target)

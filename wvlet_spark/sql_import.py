@@ -132,7 +132,11 @@ def parse_sql(sql: str) -> dict:
             import duckdb
 
             _PARSER = duckdb.connect(config={"threads": 1})
-        raw = _PARSER.execute(query).fetchone()[0]
+        try:
+            raw = _PARSER.execute(query).fetchone()[0]
+        except UnicodeEncodeError as ex:  # e.g. a lone surrogate
+            raise SqlImportError(
+                f"SQL parse error: not UTF-8 text ({ex.reason})") from ex
     ast = json.loads(raw)
     if ast.get("error"):
         raise SqlImportError(
@@ -3221,6 +3225,8 @@ def _constant(v: dict) -> str:
                "UHUGEINT", "UINTEGER", "UBIGINT"):
         return str(val)
     if tid == "DECIMAL":
+        from decimal import Decimal
+
         info = v["type"]["type_info"]
         width, scale = info["width"], info["scale"]
         s = str(val).lstrip("-")
@@ -3229,9 +3235,9 @@ def _constant(v: dict) -> str:
             return f"{neg}{s}"
         s = s.rjust(scale + 1, "0")
         lit = f"{neg}{s[:-scale]}.{s[-scale:]}"
-        if width > 18:
-            # a double literal keeps ~17 significant digits; a string
-            # casts to the decimal exactly
+        if width > 18 or Decimal(repr(float(lit))) != Decimal(lit):
+            # a wvlet number literal is a double, which keeps ~17
+            # significant digits; a string casts to the decimal exactly
             lit = f"'{lit}'"
         # keep the exact decimal type: a bare 0.06 literal lexes as double
         # in wvlet and float-folds (0.06 - 0.01 != 0.05 in binary), while
