@@ -40,6 +40,24 @@ run flow etl
     assert out.count() > 0
 
 
+def test_flow_stage_read_only_through_cte(ws, spark):
+    """A stage body that names an upstream stage only inside a CTE still
+    depends on it and reads its run-scoped output."""
+    df = ws.run("""
+flow cte_dep = {
+  stage a = { from nation where n_regionkey = 1 }
+  stage b = { with t as { from a } from t select n_nationkey }
+}
+run flow cte_dep
+""")
+    assert states(df) == {"a": "success", "b": "success"}
+    run_id = df.collect()[0]["run_id"]
+    got = sorted(r[0] for r in spark.table(f"__wv_flow_{run_id}_b").collect())
+    want = sorted(r[0] for r in spark.sql(
+        "select n_nationkey from nation where n_regionkey = 1").collect())
+    assert got == want and got
+
+
 def test_flow_params_and_parallel(ws):
     df = ws.run("""
 flow byregion(rk: int = 0) = {

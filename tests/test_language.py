@@ -948,3 +948,47 @@ def test_funnel_latency_tool(ws):
         "call funnel_latency(table='tool_events_lat', "
         "steps='A,B')").collect()}
     assert fn["A"].users == 1 and fn["B"].avg_secs == 3600.0
+
+
+@pytest.mark.parametrize("scan_first", [True, False])
+def test_nanos_parquet_scanned_and_registered(spark, tmp_path, scan_first):
+    """A pyarrow TIMESTAMP(NANOS) file reads as microsecond timestamps both
+    as a registered table and as a `from 'x.parquet'` scan, whichever
+    comes first (the registration read flips a session-wide parquet conf
+    that a plain scan would then see)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wvlet_spark import WvletSession
+
+    ns = [1_700_000_000_123_456_789, 1_700_086_400_000_001_000]
+    pq.write_table(pa.table({"id": [1, 2],
+                             "ts": pa.array(ns, pa.timestamp("ns"))}),
+                   str(tmp_path / "wv_nanos.parquet"))
+    expected = [[1, ns[0] // 1000], [2, ns[1] // 1000]]
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    old = spark.conf.get(conf, None)
+    spark.conf.unset(conf)
+    try:
+        ws = WvletSession(spark, file_base=str(tmp_path), test_mode=False)
+        shape = " order by id select id, unix_micros(ts) as us"
+
+        def scanned():
+            return rows(ws.run("from 'wv_nanos.parquet'" + shape))
+
+        def registered():
+            ws.register_parquet_dir(str(tmp_path))
+            return rows(ws.run("from wv_nanos" + shape))
+
+        if scan_first:
+            assert scanned() == expected
+            assert registered() == expected
+        else:
+            assert registered() == expected
+            assert scanned() == expected
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
+        spark.catalog.dropTempView("wv_nanos")

@@ -125,6 +125,11 @@ def test_token_positions():
         ("IDENT", "d", 4, 7), ("OP", "<", 4, 9), ("DURATION", "30s", 4, 11),
         ("IDENT", "and", 4, 15), ("IDENT", "s", 4, 19), ("OP", "=", 4, 21),
         ("STRING", "it's", 4, 23), ("EOF", "", 5, 4)]
+    # a backquoted name may span lines too
+    toks = tokenize("from `a\nb`\nwhere x")
+    assert [(t.kind, t.line, t.col) for t in toks] == [
+        ("IDENT", 1, 1), ("BQIDENT", 1, 6), ("IDENT", 3, 1),
+        ("IDENT", 3, 7), ("EOF", 3, 8)]
 
 
 if __name__ == "__main__":

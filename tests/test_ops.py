@@ -203,6 +203,17 @@ def test_dim_probe_runs_once_per_plan(spark, monkeypatch):
     assert calls["n"] == 1
 
 
+def test_random_projection_empty_input_is_a_value_error(spark):
+    """An empty embeddings frame has no vector to take the dimension from:
+    a typed error naming the column, not a TypeError on a missing row."""
+    from wvlet_spark.ops import similarity
+    from wvlet_spark.session import read_parquet_robust
+
+    emb = read_parquet_robust(spark, f"{SF_DIR}/embeddings.parquet")
+    with pytest.raises(ValueError, match="'embedding'"):
+        similarity.random_projection(emb.limit(0))
+
+
 def test_minhash_hot_bucket_cap_on_by_default():
     """The scale guard must not be opt-in: at 100 TB an uncapped degenerate
     bucket makes the candidate join quadratic, so the default must cap."""

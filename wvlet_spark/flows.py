@@ -38,6 +38,7 @@ from concurrent.futures import ThreadPoolExecutor, Future
 from dataclasses import dataclass, field
 
 from wvlet_spark import nodes as N
+from wvlet_spark.analyzer import transform, walk
 
 # terminal stage states — lowercase vocabulary matches the reference's
 # run-summary output (spec/basic/flow-run.wv: success/failed/skipped;
@@ -406,23 +407,8 @@ class FlowExecutor:
         return ds
 
     def _body_table_refs(self, rel, stage_names: set) -> set[str]:
-        found: set[str] = set()
-
-        def walk(node):
-            if node is None or not hasattr(node, "__dataclass_fields__"):
-                return
-            if isinstance(node, N.TableRef) and node.name in stage_names:
-                found.add(node.name)
-            for f in node.__dataclass_fields__:
-                v = getattr(node, f)
-                if isinstance(v, list):
-                    for item in v:
-                        walk(item) if hasattr(item, "__dataclass_fields__") else None
-                elif hasattr(v, "__dataclass_fields__"):
-                    walk(v)
-
-        walk(rel)
-        return found
+        return {n.name for n in walk(rel)
+                if isinstance(n, N.TableRef) and n.name in stage_names}
 
     def _cond_stage_refs(self, cond) -> set[str]:
         """Names referenced as x.failed / x.done / x.succeeded in a trigger."""
@@ -627,30 +613,16 @@ class FlowExecutor:
         return self.session.df_for_relation(rel, params=bound_args)
 
     def _rewrite_table_refs(self, rel, mapping: dict[str, str]):
-        import copy
-
-        def walk(node):
-            if node is None or not hasattr(node, "__dataclass_fields__"):
+        def rel_fn(node):
+            if not (isinstance(node, N.TableRef) and node.name in mapping):
                 return node
-            node = copy.copy(node)
-            if isinstance(node, N.TableRef) and node.name in mapping:
-                # alias the scoped view back to the stage name so qualified
-                # refs (`clean.customer_id` in a join ON) still resolve
-                # (spec/basic/flow-run.wv JoinPipeline)
-                orig = node.name
-                node.name = mapping[orig]
-                if "." not in orig:
-                    return N.AliasedRelation(node, orig)
-                return node
-            for f in node.__dataclass_fields__:
-                v = getattr(node, f)
-                if isinstance(v, list):
-                    setattr(node, f, [walk(i) if hasattr(i, "__dataclass_fields__") else i for i in v])
-                elif hasattr(v, "__dataclass_fields__"):
-                    setattr(node, f, walk(v))
-            return node
+            # alias the scoped view back to the stage name so qualified
+            # refs (`clean.customer_id` in a join ON) still resolve
+            # (spec/basic/flow-run.wv JoinPipeline)
+            ref = N.TableRef(mapping[node.name])
+            return ref if "." in node.name else N.AliasedRelation(ref, node.name)
 
-        return walk(rel)
+        return transform(rel, rel_fn=rel_fn)
 
     def _ensure_route_views(self, run_id: str, route: N.FlowRoute) -> dict[int, str]:
         """Create one temp view per route case over the source stage's
@@ -688,8 +660,6 @@ class FlowExecutor:
             elif case.cond is not None:
                 # `case _.age >= 18` — `_` refers to the routed relation's
                 # current row (reference: spec/basic/flow-run.wv)
-                from wvlet_spark.analyzer import transform as _tf
-
                 def _drop_underscore(n):
                     if isinstance(n, (N.Ref, N.MethodCall)) and isinstance(
                             getattr(n, "qualifier", getattr(n, "target", None)),
@@ -697,7 +667,7 @@ class FlowExecutor:
                         return N.Ident(getattr(n, "name", getattr(n, "method", "")))
                     return n
 
-                pred = F.expr(self.session.expr_sql(_tf(case.cond, expr_fn=_drop_underscore)))
+                pred = F.expr(self.session.expr_sql(transform(case.cond, expr_fn=_drop_underscore)))
             else:  # else-case: remainder
                 pred = ~self._any_pred(taken_preds) if taken_preds else F.lit(True)
             view = f"__wv_route_{run_id}_{route.source}_{i}"

@@ -1085,13 +1085,6 @@ class SqlGenerator:
         sql = self.expr(e)
         return [(f"{sql} AS {self.q(name)}" if k.alias else sql, name)]
 
-    # functions whose value differs per evaluation: staging one below the
-    # Expand would freeze a single draw across grouping sets, changing
-    # results — leave them in place
-    _NONDET_FNS = {"rand", "random", "randn", "uuid", "shuffle",
-                   "monotonically_increasing_id", "ulid", "ulid_string",
-                   "scan_position", "current_timestamp", "now"}
-
     def _stage_expand_agg_inputs(self, b, items):
         """Under cube/rollup/grouping-sets, Spark's Expand duplicates every
         input row once per grouping set BEFORE the partial aggregate, so a
@@ -1107,26 +1100,10 @@ class SqlGenerator:
         (DuckDB computes grouping sets without an expand)."""
         import dataclasses as _dc
 
-        from wvlet_spark.analyzer import transform as ast_transform
+        from wvlet_spark.analyzer import transform as ast_transform, walk
 
         staged: dict[str, str] = {}
         staged_order: list[tuple[str, str]] = []
-
-        def contains_blocked(e) -> bool:
-            found = [False]
-
-            def f(x):
-                if isinstance(x, N.FunctionApply) \
-                        and (x.name.lower() in self._NONDET_FNS
-                             or getattr(x, "window", None) is not None):
-                    found[0] = True
-                if isinstance(x, N.MethodCall) \
-                        and getattr(x, "window", None) is not None:
-                    found[0] = True
-                return x
-
-            ast_transform(e, expr_fn=f)
-            return found[0]
 
         def try_stage(e):
             """Staged replacement Ident for e, or None when e must stay
@@ -1135,7 +1112,8 @@ class SqlGenerator:
             unsafe: contains an aggregate, window, or non-deterministic
             call)."""
             if isinstance(e, (N.Ident, N.Literal, N.Star)) \
-                    or self._contains_agg(e) or contains_blocked(e):
+                    or self._contains_agg(e) \
+                    or any(_varies_per_row(n) for n in walk(e)):
                 return None
             sql = self.expr(e)
             if sql == "*" or sql.endswith(".*") or re.fullmatch(
@@ -1523,7 +1501,7 @@ class SqlGenerator:
         aggregate-free, window-free items and predicates, and a
         deterministic common source (Spark dialect only — DuckDB is the
         oracle side and stays the literal set op)."""
-        from wvlet_spark.analyzer import transform as ast_transform
+        from wvlet_spark.analyzer import walk
 
         if self.dialect != SPARK:
             return None
@@ -1555,36 +1533,14 @@ class SqlGenerator:
         if any(its != items0 or c != common0 for its, _, c in parsed[1:]):
             return None
 
-        bad = [False]
+        def unsafe(x) -> bool:
+            return any(isinstance(n, (N.InSubquery, N.Exists,
+                                      N.ScalarSubquery, N.Sample))
+                       or _varies_per_row(n) for n in walk(x))
 
-        def expr_guard(x):
-            if isinstance(x, (N.InSubquery, N.Exists, N.ScalarSubquery)):
-                bad[0] = True
-            if isinstance(x, N.FunctionApply) \
-                    and (x.name.lower() in self._NONDET_FNS
-                         or getattr(x, "window", None) is not None):
-                bad[0] = True
-            if isinstance(x, N.MethodCall) \
-                    and getattr(x, "window", None) is not None:
-                bad[0] = True
-            return x
-
-        def rel_guard(r):
-            if isinstance(r, N.Sample):
-                bad[0] = True
-            return r
-
-        ast_transform(common0, expr_fn=expr_guard, rel_fn=rel_guard)
-        for it in items0:
-            ast_transform(it.expr, expr_fn=expr_guard)
-            if self._contains_agg(it.expr):
-                return None
         preds = [p for _, p, _ in parsed]
-        for p in preds:
-            ast_transform(p, expr_fn=expr_guard)
-            if self._contains_agg(p):
-                return None
-        if bad[0]:
+        if unsafe(common0) or any(unsafe(e) or self._contains_agg(e)
+                                  for e in [it.expr for it in items0] + preds):
             return None
 
         b = self.gen_rel(common0)
@@ -3092,6 +3048,23 @@ def _is_stringy(e: N.Expr) -> bool:
     if isinstance(e, N.ArithmeticOp) and e.op == "+":
         return _is_stringy(e.left) or _is_stringy(e.right)
     return False
+
+
+# functions whose value differs per evaluation: staging or fusing one
+# would freeze a single draw across the rows it used to be drawn for
+_NONDET_FNS = {"rand", "random", "randn", "uuid", "shuffle",
+               "monotonically_increasing_id", "ulid", "ulid_string",
+               "scan_position", "current_timestamp", "now"}
+
+
+def _varies_per_row(e: N.Node) -> bool:
+    """A non-deterministic or windowed call: its value depends on the row
+    set it is evaluated over, so it cannot move into a staged or fused
+    projection."""
+    if isinstance(e, N.FunctionApply) and e.name.lower() in _NONDET_FNS:
+        return True
+    return isinstance(e, (N.FunctionApply, N.MethodCall)) \
+        and getattr(e, "window", None) is not None
 
 
 def _literal_kind(v) -> str:

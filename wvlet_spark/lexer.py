@@ -73,9 +73,8 @@ def tokenize(text: str) -> list[Token]:
                 raise WvletSyntaxError(f"unterminated {what} identifier", line, col)
             tokens.append(Token("INTERP_BQIDENT" if interp else "BQIDENT",
                                 text[end:endq], line, col))
-            pos = endq + 1
-            continue
-        if kind == "block":  # /* ... */ (and /** ... */)
+            end = endq + 1
+        elif kind == "block":  # /* ... */ (and /** ... */)
             end = text.find("*/", end) + 2
             if end < 2:
                 raise WvletSyntaxError("unterminated block comment", line, col)
@@ -93,7 +92,7 @@ def tokenize(text: str) -> list[Token]:
             tokens.append(Token(kind, m.group(), line, col))
             pos = end
             continue
-        # comments, whitespace and strings may span lines
+        # comments, whitespace, strings and backquoted names may span lines
         nl = text.count("\n", pos, end)
         if nl:
             line += nl

@@ -39,14 +39,23 @@ def probe_vector_dim(df: DataFrame, vec_col: str) -> int:
     (application, plan, column).  Array element counts aren't in the parquet
     schema, so a one-row job is unavoidable — but repeated ANN/LSH calls on
     the same table must not each pay it."""
+    def probe() -> int:
+        row = df.select(vec_col).first()
+        if row is None or row[0] is None:
+            raise ValueError(
+                f"cannot infer the dimension of vector column {vec_col!r}: "
+                + ("the input has no rows" if row is None
+                   else "its first value is NULL"))
+        return len(row[0])
+
     sc = df.sparkSession.sparkContext
     try:
         key = (sc.applicationId, df.semanticHash(), vec_col)
     except Exception:
-        return len(df.select(vec_col).first()[0])
+        return probe()
     dim = _DIM_CACHE.get(key)
     if dim is None:
-        dim = len(df.select(vec_col).first()[0])
+        dim = probe()
         _DIM_CACHE[key] = dim
         while len(_DIM_CACHE) > _NPARTS_CACHE_MAX:
             _DIM_CACHE.popitem(last=False)

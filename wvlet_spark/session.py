@@ -17,8 +17,9 @@ import os
 import re
 
 from wvlet_spark import nodes as N
-from wvlet_spark.analyzer import Analyzer, transform
-from wvlet_spark.generator import DUCKDB, SPARK, CompileError, GenContext, SqlGenerator
+from wvlet_spark.analyzer import Analyzer, substitute_idents, transform, walk
+from wvlet_spark.generator import (DUCKDB, SPARK, CompileError, GenContext,
+                                   SqlGenerator, _literal_kind)
 from wvlet_spark.parser import Parser, _SaveMarker
 
 
@@ -627,7 +628,7 @@ class WvletSession:
                 for f in df.schema.fields
             ])
         else:
-            df = reader.parquet(path)
+            df = read_parquet_robust(self.spark, path)
         self._view_n += 1
         view = f"__wv_file_{self._view_n}"
         df.createOrReplaceTempView(view)
@@ -896,7 +897,8 @@ class WvletSession:
         substituted for same-named identifiers (params shadow columns,
         matching the reference's model-arg binding)."""
         if params:
-            rel = _substitute_idents(rel, params)
+            rel = substitute_idents(
+                rel, {k: _literal(v) for k, v in params.items()})
         return self.sql_df(rel)
 
     def sql_df(self, rel: N.Relation, params=None):
@@ -906,7 +908,7 @@ class WvletSession:
         # schema driver-side: (column_name, column_type) with wvlet type
         # names — reference: spec/basic/describe.wv. Schema comes from
         # Spark's analyzer only (no job runs).
-        if _contains_describe(rel):
+        if _tree_contains(rel, (N.Describe, N.DescribePrepared)):
             rel = transform(rel, rel_fn=self._stage_describe)
         rel = self._stage_agg_in_subqueries(rel, params)
         rel = self._stage_multi_ref_ctes(rel, params)
@@ -949,44 +951,8 @@ class WvletSession:
         standalone, a CTE name that shadows a real table would silently
         resolve to the TABLE (wrong relation), so any name collision
         disqualifies staging."""
-        import dataclasses
-
-        from wvlet_spark.analyzer import transform as ast_transform
-
-        cte_names: set[str] = set()
-
-        def collect_ctes(x):
-            if isinstance(x, N.WithQuery):
-                for name, _q in x.defs:
-                    cte_names.add(name.lower())
-            if dataclasses.is_dataclass(x) and not isinstance(x, type):
-                for f in dataclasses.fields(x):
-                    collect_ctes(getattr(x, f.name))
-            elif isinstance(x, (list, tuple)):
-                for i in x:
-                    collect_ctes(i)
-
-        collect_ctes(rel)
-
-        def refs_cte(sub: N.Relation) -> bool:
-            hit = False
-
-            def walk(x):
-                nonlocal hit
-                if hit:
-                    return
-                if isinstance(x, N.TableRef) and x.name.lower() in cte_names:
-                    hit = True
-                    return
-                if dataclasses.is_dataclass(x) and not isinstance(x, type):
-                    for f in dataclasses.fields(x):
-                        walk(getattr(x, f.name))
-                elif isinstance(x, (list, tuple)):
-                    for i in x:
-                        walk(i)
-
-            walk(sub)
-            return hit
+        cte_names = {name.lower() for n in walk(rel)
+                     if isinstance(n, N.WithQuery) for name, _q in n.defs}
 
         def expr_fn(e: N.Expr) -> N.Expr:
             if not isinstance(e, N.InSubquery):
@@ -994,7 +960,9 @@ class WvletSession:
             if not _tree_contains(e.query, (N.GroupBy, N.Agg, N.Dedup,
                                             N.CountRel)):
                 return e
-            if cte_names and refs_cte(e.query):
+            if cte_names and any(isinstance(n, N.TableRef)
+                                 and n.name.lower() in cte_names
+                                 for n in walk(e.query)):
                 return e
             try:
                 sub_sql = self._gen_sql(e.query, SPARK, params=params)
@@ -1007,7 +975,7 @@ class WvletSession:
             self._schema_cache[view] = df.columns
             return N.InSubquery(e.expr, N.TableRef(view), e.negated)
 
-        return ast_transform(rel, expr_fn=expr_fn)
+        return transform(rel, expr_fn=expr_fn)
 
     def _stage_multi_ref_ctes(self, rel: N.Relation,
                               params=None) -> N.Relation:
@@ -1032,36 +1000,19 @@ class WvletSession:
         for that name — a standalone compile could bind the wrong
         relation.  Recursive WITH blocks are left untouched."""
         import dataclasses
+        from collections import Counter
 
+        if not isinstance(rel, N.WithQuery) or rel.recursive:
+            return rel
         # count every CTE definition by name across the whole tree (a
         # nested WITH could shadow an outer name)
-        def_counts: dict[str, int] = {}
-
-        def count_defs(x):
-            if isinstance(x, N.WithQuery):
-                for name, _q in x.defs:
-                    def_counts[name.lower()] = \
-                        def_counts.get(name.lower(), 0) + 1
-            if dataclasses.is_dataclass(x) and not isinstance(x, type):
-                for f in dataclasses.fields(x):
-                    count_defs(getattr(x, f.name))
-            elif isinstance(x, (list, tuple)):
-                for i in x:
-                    count_defs(i)
-
-        count_defs(rel)
+        def_counts = Counter(name.lower() for n in walk(rel)
+                             if isinstance(n, N.WithQuery)
+                             for name, _q in n.defs)
 
         def count_refs(x, name: str) -> int:
-            n = 0
-            if isinstance(x, N.TableRef) and x.name.lower() == name:
-                n += 1
-            if dataclasses.is_dataclass(x) and not isinstance(x, type):
-                for f in dataclasses.fields(x):
-                    n += count_refs(getattr(x, f.name), name)
-            elif isinstance(x, (list, tuple)):
-                for i in x:
-                    n += count_refs(i, name)
-            return n
+            return sum(isinstance(n, N.TableRef) and n.name.lower() == name
+                       for n in walk(x))
 
         def rename_refs(x, name: str, view: str, orig: str):
             """TableRef(name) -> AliasedRelation(TableRef(view), orig):
@@ -1071,8 +1022,6 @@ class WvletSession:
             the first version renamed in place).  An explicitly aliased
             reference (`cte AS x`) keeps its own alias: the bottom-up
             rewrite collapses the doubled alias node."""
-            from wvlet_spark.analyzer import transform as ast_transform
-
             def rel_fn(n):
                 if isinstance(n, N.TableRef) and n.name.lower() == name:
                     return N.AliasedRelation(N.TableRef(view), orig)
@@ -1084,10 +1033,8 @@ class WvletSession:
                     return dataclasses.replace(n, child=n.child.child)
                 return n
 
-            return ast_transform(x, rel_fn=rel_fn)
+            return transform(x, rel_fn=rel_fn)
 
-        if not isinstance(rel, N.WithQuery) or rel.recursive:
-            return rel
         kept_defs: list[tuple[str, N.Relation]] = []
         defs = list(rel.defs)
         body = rel.body
@@ -1101,7 +1048,7 @@ class WvletSession:
             refs_kept = any(count_refs(q, kn.lower()) for kn, _ in kept_defs)
             if (nrefs < 2
                     or refs_kept
-                    or def_counts.get(name.lower(), 0) > 1
+                    or def_counts[name.lower()] > 1
                     or not _tree_contains(q, (N.GroupBy, N.Agg, N.Dedup,
                                               N.CountRel))):
                 kept_defs.append((name, q))
@@ -1151,8 +1098,6 @@ class WvletSession:
         Spark's analyzer with parameters null-bound (no job runs)."""
         from copy import deepcopy
 
-        from wvlet_spark.analyzer import transform as ast_transform
-
         mdl = self.analyzer.models.get(node.name)
         if mdl is None:
             raise CompileError(f"unknown prepared statement / model: "
@@ -1160,8 +1105,7 @@ class WvletSession:
         if node.kind == "input":
             seen: list[tuple[int, str]] = []
             order: dict[str, int] = {}
-
-            def collect(n):
+            for n in walk(mdl.body):
                 if isinstance(n, N.Param):
                     key = n.name if n.kind == "name" else str(n.index)
                     if key not in order:
@@ -1169,9 +1113,6 @@ class WvletSession:
                             and n.index else len(order) + 1
                         order[key] = pos
                         seen.append((pos, "unknown"))
-                return n
-
-            ast_transform(mdl.body, expr_fn=collect)
             for i, (pname, ptype, _d) in enumerate(mdl.params or []):
                 seen.append((i + 1, ptype or "unknown"))
             rows = sorted(set(seen)) or []
@@ -1186,7 +1127,7 @@ class WvletSession:
                     return N.Literal(None, "null")
                 return n
 
-            body = ast_transform(deepcopy(mdl.body), expr_fn=null_bind)
+            body = transform(deepcopy(mdl.body), expr_fn=null_bind)
             body = self.analyzer.resolve(body, (node.name,))
             schema = self.spark.sql(self._gen_sql(body, SPARK)).schema
             rows = [(f.name, _type_name(f.dataType)) for f in schema.fields]
@@ -1199,15 +1140,9 @@ class WvletSession:
         return N.TableRef(view)
 
     def _run_debugs(self, rel: N.Relation) -> None:
-        debugs: list[N.Debug] = []
-
-        def rel_fn(node):
-            if isinstance(node, N.Debug):
-                debugs.append(node)
-            return node
-
-        transform(rel, rel_fn=rel_fn)
-        for d in debugs:
+        # reversed pre-order: an upstream debug in a pipe runs first
+        debugs = [n for n in walk(rel) if isinstance(n, N.Debug)]
+        for d in reversed(debugs):
             body = d.body if d.body is not None else d.child
             try:
                 from wvlet_spark.parser import _HoleRelation
@@ -1409,30 +1344,7 @@ def _parse_byte_conf(v) -> int | None:
 
 
 def _tree_contains(rel, types: tuple) -> bool:
-    import dataclasses
-
-    found = False
-
-    def walk(x):
-        nonlocal found
-        if found:
-            return
-        if isinstance(x, types):
-            found = True
-            return
-        if dataclasses.is_dataclass(x) and not isinstance(x, type):
-            for f in dataclasses.fields(x):
-                walk(getattr(x, f.name))
-        elif isinstance(x, (list, tuple)):
-            for i in x:
-                walk(i)
-
-    walk(rel)
-    return found
-
-
-def _contains_describe(rel) -> bool:
-    return _tree_contains(rel, (N.Describe, N.DescribePrepared))
+    return any(isinstance(n, types) for n in walk(rel))
 
 
 def _json_key_order(path: str) -> list[str] | None:
@@ -1466,18 +1378,6 @@ def _json_key_order(path: str) -> list[str] | None:
 def _bind_prepared_params(rel: N.Relation, params: list | tuple | dict):
     """Replace Param nodes with literal values: `?`/`$1` bind positionally
     from a list/tuple (1-origin), `$name` from a dict."""
-    from wvlet_spark.analyzer import transform
-
-    def lit(v):
-        if v is None:
-            return N.Literal(None, "null")
-        if isinstance(v, bool):
-            return N.Literal(v, "bool")
-        if isinstance(v, int):
-            return N.Literal(v, "int")
-        if isinstance(v, float):
-            return N.Literal(v, "float")
-        return N.Literal(str(v), "string")
 
     def expr_fn(node):
         if not isinstance(node, N.Param):
@@ -1485,45 +1385,23 @@ def _bind_prepared_params(rel: N.Relation, params: list | tuple | dict):
         if node.kind == "name":
             if not isinstance(params, dict) or node.name not in params:
                 raise CompileError(f"missing value for parameter ${node.name}")
-            return lit(params[node.name])
+            return _literal(params[node.name])
         if isinstance(params, dict):
             if node.index in params:
-                return lit(params[node.index])
+                return _literal(params[node.index])
             raise CompileError(f"missing value for parameter #{node.index}")
         if 1 <= node.index <= len(params):
-            return lit(params[node.index - 1])
+            return _literal(params[node.index - 1])
         raise CompileError(f"missing value for parameter #{node.index} "
                            f"(got {len(params)} values)")
 
     return transform(rel, expr_fn=expr_fn)
 
 
-def _substitute_idents(rel: N.Relation, params: dict):
-    """Deep-copy rewrite replacing Ident(name) with a literal for every
-    bound parameter name."""
-    import copy
-
-    def lit(v):
-        kind = ("null" if v is None else "int" if isinstance(v, bool) is False
-                and isinstance(v, int) else "float" if isinstance(v, float)
-                else "string")
-        return N.Literal(v, kind)
-
-    def walk(node):
-        if isinstance(node, N.Ident) and node.name in params:
-            return lit(params[node.name])
-        if node is None or not hasattr(node, "__dataclass_fields__"):
-            return node
-        node = copy.copy(node)
-        for f in node.__dataclass_fields__:
-            v = getattr(node, f)
-            if isinstance(v, list):
-                setattr(node, f, [walk(i) if hasattr(i, "__dataclass_fields__") else i for i in v])
-            elif hasattr(v, "__dataclass_fields__"):
-                setattr(node, f, walk(v))
-        return node
-
-    return walk(rel)
+def _literal(v) -> N.Literal:
+    """A Python parameter value as a wvlet literal."""
+    kind = _literal_kind(v)
+    return N.Literal(str(v) if kind == "string" else v, kind)
 
 
 def compile_to_sql(text: str, dialect: str = SPARK) -> str:
