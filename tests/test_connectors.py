@@ -146,10 +146,11 @@ def test_trino_profile_isolated_between_sessions(spark, mock_trino):
                                poll_interval=0)
     ws2.register_trino_profile("tr", "127.0.0.1", mock_trino,
                                poll_interval=0)
-    a = ws1.run("from tr.items select id order by id")
-    b = ws2.run("from tr.items select id order by id")
-    assert [r.id for r in a.collect()] == [r.id for r in b.collect()] == \
-        [1, 2, 3]
-    views1 = set(ws1._conn_staged.values())
-    views2 = set(ws2._conn_staged.values())
+    with ws1.scope() as s1, ws2.scope() as s2:
+        a = ws1.run("from tr.items select id order by id")
+        b = ws2.run("from tr.items select id order by id")
+        assert [r.id for r in a.collect()] == [r.id for r in b.collect()] \
+            == [1, 2, 3]
+        views1 = set(s1.views)
+        views2 = set(s2.views)
     assert views1 and views2 and views1.isdisjoint(views2)

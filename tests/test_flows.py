@@ -58,6 +58,23 @@ run flow cte_dep
     assert got == want and got
 
 
+def test_flow_cte_named_like_a_stage_is_the_cte(ws, spark):
+    """A CTE inside a stage body that shares a stage's name is that CTE:
+    the body reads its own rows and does not depend on the stage (which
+    fails here, so a dependency would skip `b`)."""
+    df = ws.run("""
+flow shadow = {
+  stage a = { from no_such_table_for_shadow }
+  stage b = { with a as { from nation } from a }
+}
+run flow shadow
+""")
+    assert states(df) == {"a": "failed", "b": "success"}
+    run_id = df.collect()[0]["run_id"]
+    got = sorted(tuple(r) for r in spark.table(f"__wv_flow_{run_id}_b").collect())
+    assert got == sorted(tuple(r) for r in spark.table("nation").collect())
+
+
 def test_flow_params_and_parallel(ws):
     df = ws.run("""
 flow byregion(rk: int = 0) = {

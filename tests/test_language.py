@@ -455,19 +455,53 @@ order by l.id
 
 def test_connector_staged_views_isolated_between_sessions(spark):
     """Two WvletSessions sharing one SparkSession stage the same connector
-    under different ULID-suffixed view names — no cross-talk."""
+    under different view names — no cross-talk."""
     from wvlet_spark import WvletSession
 
     ws1 = WvletSession(spark)
     ws2 = WvletSession(spark)
     ws1.register_connector("ext.x", lambda s: s.createDataFrame([(1,)], ["v"]))
     ws2.register_connector("ext.x", lambda s: s.createDataFrame([(2,)], ["v"]))
-    r1 = ws1.run("from ext.x select v").collect()[0][0]
-    v1 = ws1._conn_staged["ext.x"]
-    r2 = ws2.run("from ext.x select v").collect()[0][0]
-    v2 = ws2._conn_staged["ext.x"]
+    with ws1.scope() as s1, ws2.scope() as s2:
+        r1 = ws1.run("from ext.x select v").collect()[0][0]
+        v1 = s1.conn["ext.x"]
+        r2 = ws2.run("from ext.x select v").collect()[0][0]
+        v2 = s2.conn["ext.x"]
     assert (r1, r2) == (1, 2)
     assert v1 != v2
+
+
+def test_connector_views_last_one_statement(spark):
+    """A connector view goes when the next statement starts or its scope
+    closes, with its schema-cache entries; bare runs, whose scope nobody
+    closes, drop theirs on return, so repeated bare runs leave none behind
+    and their frames still collect."""
+    from wvlet_spark import WvletSession
+
+    ws = WvletSession(spark)
+    data = {"rows": [(1,)], "schema": "v bigint"}
+    ws.register_connector(
+        "ext.x", lambda s: s.createDataFrame(data["rows"], data["schema"]))
+
+    def conn_views():
+        return {t.name for t in spark.catalog.listTables()
+                if t.name.startswith("__wv_conn_")}
+
+    before = conn_views()
+    dfs = [ws.run("from ext.x select v") for _ in range(5)]
+    assert conn_views() == before
+    assert not [v for v in ws._schema_cache if v.startswith("__wv_conn_")]
+    assert [df.collect()[0][0] for df in dfs] == [1] * 5
+    with ws.scope() as s:
+        ws.run("from ext.x select v")
+        assert ws.column_type("v") == "bigint"
+        data.update(rows=[("a",)], schema="v string")
+        for _ in range(3):
+            ws.run("from ext.x select v")
+        assert conn_views() - before == set(s.conn.values())
+        assert len(s.conn) == 1
+        assert ws.column_type("v") == "string"
+    assert conn_views() == before
 
 
 def test_call_tool(ws, spark):
@@ -864,6 +898,40 @@ def test_builtin_pipeline_tools(spark):
     assert pf[0].col_name == "doc_id" and pf[0].n_distinct == 3
 
 
+
+def test_call_casts_numeric_arguments(spark):
+    """`call` casts the arguments an op takes as int, so a tool called with
+    `2.0` answers as the op called with `2`."""
+    from wvlet_spark import WvletSession
+    from wvlet_spark.ops import sampling, similarity, text
+
+    spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0], 1, "en", 5), (1, [0.99, 0.1, 0.0], 2, "en", 9),
+         (2, [0.95, 0.2, 0.0], 1, "de", 7), (3, [0.0, 1.0, 0.0], 2, "de", 3)],
+        "vec_id long, embedding array<double>, label int, lang string, "
+        "n_chars int").withColumnRenamed("vec_id", "doc_id") \
+        .createOrReplaceTempView("tool_cast_docs")
+    spark.table("tool_cast_docs").withColumnRenamed("doc_id", "vec_id") \
+        .createOrReplaceTempView("tool_cast_vecs")
+    ws = WvletSession(spark, test_mode=False)
+    try:
+        for call, want in [
+                ("epoch_shuffle(table='tool_cast_docs', epoch=2.0)",
+                 sampling.epoch_shuffle(spark.table("tool_cast_docs"), 2)),
+                ("length_histogram(table='tool_cast_docs', n_buckets=2.0)",
+                 text.length_histogram(spark.table("tool_cast_docs"),
+                                       n_buckets=2)),
+                ("hard_negatives(table='tool_cast_vecs', k=1.0, "
+                 "anchor_mod=2.0)",
+                 similarity.hard_negative_mining(
+                     spark.table("tool_cast_vecs"), k=1, anchor_mod=2))]:
+            assert sorted(rows(ws.run("call " + call)), key=repr) == \
+                sorted(rows(want), key=repr), call
+    finally:
+        spark.catalog.dropTempView("tool_cast_docs")
+        spark.catalog.dropTempView("tool_cast_vecs")
+
+
 def test_agg_in_subquery_cte_shadowing(ws):
     """The aggregate-IN-subquery staging (q18 single-aggregation path)
     must NOT fire when the subquery references a CTE that shadows a real
@@ -952,43 +1020,46 @@ def test_funnel_latency_tool(ws):
 
 @pytest.mark.parametrize("scan_first", [True, False])
 def test_nanos_parquet_scanned_and_registered(spark, tmp_path, scan_first):
-    """A pyarrow TIMESTAMP(NANOS) file reads as microsecond timestamps both
-    as a registered table and as a `from 'x.parquet'` scan, whichever
-    comes first (the registration read flips a session-wide parquet conf
-    that a plain scan would then see)."""
+    """A pyarrow TIMESTAMP(NANOS) file, and a directory of such part files,
+    reads as microsecond timestamps both as a registered table and as a
+    `from 'x.parquet'` scan, whichever comes first (the registration read
+    flips a session-wide parquet conf that a plain scan would then see)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from wvlet_spark import WvletSession
 
     ns = [1_700_000_000_123_456_789, 1_700_086_400_000_001_000]
-    pq.write_table(pa.table({"id": [1, 2],
-                             "ts": pa.array(ns, pa.timestamp("ns"))}),
-                   str(tmp_path / "wv_nanos.parquet"))
+    table = pa.table({"id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns"))})
+    pq.write_table(table, str(tmp_path / "wv_nanos.parquet"))
+    (tmp_path / "wv_nanos_dir.parquet").mkdir()
+    pq.write_table(table, str(tmp_path / "wv_nanos_dir.parquet" / "part-0.parquet"))
     expected = [[1, ns[0] // 1000], [2, ns[1] // 1000]]
     conf = "spark.sql.legacy.parquet.nanosAsLong"
     old = spark.conf.get(conf, None)
-    spark.conf.unset(conf)
     try:
-        ws = WvletSession(spark, file_base=str(tmp_path), test_mode=False)
-        shape = " order by id select id, unix_micros(ts) as us"
+        for name in ("wv_nanos", "wv_nanos_dir"):
+            spark.conf.unset(conf)
+            ws = WvletSession(spark, file_base=str(tmp_path), test_mode=False)
+            shape = " order by id select id, unix_micros(ts) as us"
 
-        def scanned():
-            return rows(ws.run("from 'wv_nanos.parquet'" + shape))
+            def scanned():
+                return rows(ws.run(f"from '{name}.parquet'" + shape))
 
-        def registered():
-            ws.register_parquet_dir(str(tmp_path))
-            return rows(ws.run("from wv_nanos" + shape))
+            def registered():
+                ws.register_parquet_dir(str(tmp_path))
+                return rows(ws.run(f"from {name}" + shape))
 
-        if scan_first:
-            assert scanned() == expected
-            assert registered() == expected
-        else:
-            assert registered() == expected
-            assert scanned() == expected
+            if scan_first:
+                assert scanned() == expected, name
+                assert registered() == expected, name
+            else:
+                assert registered() == expected, name
+                assert scanned() == expected, name
     finally:
         if old is None:
             spark.conf.unset(conf)
         else:
             spark.conf.set(conf, old)
         spark.catalog.dropTempView("wv_nanos")
+        spark.catalog.dropTempView("wv_nanos_dir")

@@ -154,3 +154,134 @@ def test_flows_endpoint(server):
     assert got["runs"] and got["runs"][0]["flow"] == "nightly"
     states = {s["stage"]: s["state"] for s in got["runs"][0]["stages"]}
     assert states.get("s1") in ("succeeded", "success", "done", "finished")
+
+
+# suite entries that stage views (IN-subquery keys, multiply referenced
+# aggregate CTEs) and checkpoint them
+STAGING = ["in_subquery", "tpch_q15", "tpch_q18", "tpch_q20_like",
+           "tpcds_q44_best_worst"]
+
+
+def _norm(rows):
+    """Rows in a stable order, doubles to 10 digits (a concurrent run may
+    sum in another order)."""
+    def cell(v):
+        return float(f"{v:.10g}") if isinstance(v, float) else v
+    return sorted((tuple(cell(v) for v in r) for r in rows), key=repr)
+
+
+def test_wv_file_view_outlives_requests(spark, tmp_path):
+    """`from 'q.wv'` is cached session-wide as a view; a body that stages
+    a checkpointed IN-subquery must still read on the next request, after
+    the first request's scope has closed."""
+    from tests.conftest import SF_DIR
+    from wvlet_spark import WvletSession
+    from wvlet_spark.server import WvletServer
+    from wvlet_spark.suite import SUITE
+
+    (tmp_path / "q.wv").write_text(SUITE["in_subquery"][0])
+    srv = WvletServer(WvletSession(spark, table_dir=SF_DIR,
+                                   file_base=str(tmp_path)))
+    infos = [srv.execute_request({"query": "from 'q.wv'"}) for _ in range(2)]
+    assert [i["error"] for i in infos] == [None, None]
+    assert infos[0]["rowCount"] > 0
+    assert infos[0]["rows"] == infos[1]["rows"]
+
+
+def test_call_on_model_reports_no_sql(spark):
+    """A `call` statement runs no query statement of its own: its `sql` is
+    null, also when the tool reads a model."""
+    from wvlet_spark import WvletSession
+    from wvlet_spark.server import WvletServer
+
+    srv = WvletServer(WvletSession(spark, test_mode=False))
+    info = srv.execute_request({"query": (
+        'model m = { from [[1, "a b"], [2, "a b"]] as t(doc_id, text) }\n'
+        "call exact_dedup(table='m')"), "querySelection": "all"})
+    assert info["error"] is None, info["error"]
+    assert info["rowCount"] == 1 and info["sql"] is None
+
+
+def test_concurrent_requests_match_sequential(spark):
+    """4 threads send distinct suite entries with mixed isTestRun through
+    one server: each response's rows and test results, and the set of
+    query ids, are those of a sequential run of the same requests."""
+    import sys
+    import threading
+
+    from tests.conftest import SF_DIR
+    from wvlet_spark import WvletSession
+    from wvlet_spark.server import WvletServer
+    from wvlet_spark.suite import SUITE
+
+    # (a test after a `with` query is not evaluated, so those stay out)
+    names = [n for n in SUITE if n != "flow_dag_run"
+             and not SUITE[n][0].lstrip().startswith("with")][:19]
+    names += ["tpch_q18"]  # in_subquery is among the first 19
+    reqs = {n: {"query": SUITE[n][0] + "\ntest _.size >= 0",
+                "isTestRun": i % 2 == 0, "maxRows": 100_000}
+            for i, n in enumerate(names)}
+
+    def answer(info):
+        assert info["error"] is None, info["error"]
+        return _norm(info["rows"]), info["testResults"]
+
+    seq = WvletServer(WvletSession(spark, table_dir=SF_DIR))
+    seq_ids, want = [], {}
+    for n in names:
+        info = seq.execute_request(reqs[n])
+        seq_ids.append(info["queryId"])
+        want[n] = answer(info)
+    assert all(want[n][1] == ([[True, "ok"]] if reqs[n]["isTestRun"]
+                              else []) for n in names)
+
+    srv = WvletServer(WvletSession(spark, table_dir=SF_DIR))
+    got: dict[str, dict] = {}
+
+    def client(part):
+        for n in part:
+            got[n] = srv.execute_request(reqs[n])
+
+    threads = [threading.Thread(target=client, args=(names[i::4],))
+               for i in range(4)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often: races show sooner
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert {n: answer(got[n]) for n in names} == want
+    assert sorted(info["queryId"] for info in got.values()) == seq_ids
+    assert len(srv._history) == len(names)
+
+
+def test_soak_leaves_nothing_staged(spark):
+    """200 requests over non-flow suite entries, the staging ones among
+    them, leave the persistent-RDD and `__wv_*` view counts where they
+    were: each request's scope drops its views and frees its checkpoints."""
+    from tests.conftest import SF_DIR
+    from wvlet_spark import WvletSession
+    from wvlet_spark.server import WvletServer
+    from wvlet_spark.suite import SUITE
+
+    def held():
+        views = [t.name for t in spark.catalog.listTables()
+                 if t.name.startswith("__wv_")]
+        return len(spark.sparkContext._jsc.getPersistentRDDs()), len(views)
+
+    cheap = ["tpch_q6", "bare_count", "values_inline", "with_cte",
+             "set_ops", "null_handling", "select_distinct", "agg_sugar",
+             "case_if_expr", "window_rank", "exists_subquery", "tpch_q3",
+             "anti_join_not_in", "having_filter", "column_ops"]
+    names = (STAGING + cheap) * 10
+    srv = WvletServer(WvletSession(spark, table_dir=SF_DIR))
+    before = held()
+    for n in names:
+        info = srv.execute_request({"query": SUITE[n][0]})
+        assert info["error"] is None, (n, info["error"])
+    assert len(names) >= 200
+    assert held() == before

@@ -40,8 +40,9 @@ def test_spec_trino_file(spark, tmp_path, fname):
     with open(f"{SPEC}/trino/{fname}", encoding="utf-8") as f:
         text = f.read()
     ws = WvletSession(spark, file_base=str(tmp_path), test_mode=True)
-    ws.run(text)
-    assert all(ok for ok, _ in ws.last_test_results)
+    with ws.scope() as scope:
+        ws.run(text)
+        assert all(ok for ok, _ in scope.test_results)
 
 
 @pytest.mark.parametrize("fname", _files("td-trino"))

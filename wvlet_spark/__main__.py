@@ -56,8 +56,8 @@ def cmd_run(args) -> int:
                       or (os.path.dirname(os.path.abspath(args.file))
                           if args.file else None),
                       test_mode=not args.no_test)
-    df = ws.run(text)
-    _print_result(df, args.limit)
+    with ws.scope():
+        _print_result(ws.run(text), args.limit)
     return 0
 
 
@@ -107,7 +107,9 @@ def cmd_repl(args) -> int:
             text = "\n".join(buf)
             buf = []
             try:
-                _print_result(ws.run(text), args.limit)
+                # each buffer's staged views and checkpoints go once printed
+                with ws.scope():
+                    _print_result(ws.run(text), args.limit)
             except (WvletSyntaxError, CompileError, Exception) as ex:
                 print(f"error: {ex}", file=sys.stderr)
         elif line.strip():

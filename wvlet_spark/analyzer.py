@@ -84,6 +84,12 @@ def walk(node):
                              for f in reversed(dataclasses.fields(x)))
 
 
+def cte_names(rel) -> set[str]:
+    """The names bound by every WITH inside `rel`."""
+    return {name for n in walk(rel) if isinstance(n, N.WithQuery)
+            for name, _q in n.defs}
+
+
 class Analyzer:
     """Holds the session's definitions and rewrites query plans."""
 

@@ -29,6 +29,7 @@ scheduler is driver-side bookkeeping; all data movement stays in Spark.
 
 from __future__ import annotations
 
+import contextvars
 import re
 import sqlite3
 import threading
@@ -38,7 +39,7 @@ from concurrent.futures import ThreadPoolExecutor, Future
 from dataclasses import dataclass, field
 
 from wvlet_spark import nodes as N
-from wvlet_spark.analyzer import transform, walk
+from wvlet_spark.analyzer import cte_names, transform, walk
 
 # terminal stage states — lowercase vocabulary matches the reference's
 # run-summary output (spec/basic/flow-run.wv: success/failed/skipped;
@@ -332,7 +333,10 @@ class FlowExecutor:
                         continue
                     sr.state = RUNNING
                     sr.started = time.time()
+                    # the stage body runs in the `run flow` statement's
+                    # RunScope, which lives in the submitting context
                     sr.future = pool.submit(
+                        contextvars.copy_context().run,
                         self._run_stage_with_retries, run_id, flow, sr,
                         bound_args, route_by_target)
                     progress = True
@@ -407,8 +411,10 @@ class FlowExecutor:
         return ds
 
     def _body_table_refs(self, rel, stage_names: set) -> set[str]:
+        # a name a WITH in the body binds is that CTE, not the stage
+        names = stage_names - cte_names(rel)
         return {n.name for n in walk(rel)
-                if isinstance(n, N.TableRef) and n.name in stage_names}
+                if isinstance(n, N.TableRef) and n.name in names}
 
     def _cond_stage_refs(self, cond) -> set[str]:
         """Names referenced as x.failed / x.done / x.succeeded in a trigger."""
@@ -484,7 +490,8 @@ class FlowExecutor:
                     # on timeout the stale attempt is abandoned (no wait) so
                     # the retry loop proceeds instead of blocking on shutdown
                     inner = ThreadPoolExecutor(max_workers=1)
-                    fut = inner.submit(self._run_stage_once, run_id, flow,
+                    fut = inner.submit(contextvars.copy_context().run,
+                                       self._run_stage_once, run_id, flow,
                                        sr, bound_args, route_by_target)
                     try:
                         fut.result(timeout=timeout_ms / 1000.0)
@@ -613,6 +620,9 @@ class FlowExecutor:
         return self.session.df_for_relation(rel, params=bound_args)
 
     def _rewrite_table_refs(self, rel, mapping: dict[str, str]):
+        ctes = cte_names(rel)
+        mapping = {k: v for k, v in mapping.items() if k not in ctes}
+
         def rel_fn(node):
             if not (isinstance(node, N.TableRef) and node.name in mapping):
                 return node

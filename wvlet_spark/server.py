@@ -19,6 +19,8 @@ dependency-frozen):
       -> {"queryId", "status": "finished|failed", "columns": [...],
           "rows": [[...]], "rowCount", "clipped", "sql", "elapsedMs",
           "error": null | {"message"}, "testResults": [[ok, msg], ...]}
+      `sql` is the Spark SQL the run executed for its last query
+      statement (null when it ran none).
   GET  /v1/query/<queryId>
       -> the same QueryInfo again (results are kept for `history` ids)
 
@@ -26,7 +28,11 @@ Queries execute synchronously per request (Spark local mode answers
 preview-sized queries in well under a request timeout); the async
 submit/poll split of the reference is collapsed into one call, with
 getQueryInfo serving the recorded result.  Sessions: one WvletSession per
-server, matching the reference's default shared session.
+server, matching the reference's default shared session.  Requests are
+isolated: each runs in its own RunScope (its test mode, test results,
+staged views and checkpoints), closed once its rows are collected, so
+concurrent requests neither see each other's results nor leave staged
+data pinned.
 """
 
 from __future__ import annotations
@@ -156,8 +162,9 @@ class WvletServer:
     def execute_request(self, req: dict) -> dict:
         from wvlet_spark.selector import select_text
 
-        self._n += 1
-        qid = f"q_{self._n:06d}"
+        with self._hist_lock:
+            self._n += 1
+            qid = f"q_{self._n:06d}"
         text = req.get("query", "")
         mode = req.get("querySelection", "subquery")
         line = req.get("line")
@@ -170,26 +177,19 @@ class WvletServer:
         }
         try:
             selected = select_text(text, line, mode)
-            old_test_mode = self.session.test_mode
-            self.session.test_mode = bool(req.get("isTestRun", True))
-            try:
+            with self.session.scope(
+                    test_mode=bool(req.get("isTestRun", True))) as scope:
                 df = self.session.run(selected)
-            finally:
-                self.session.test_mode = old_test_mode
-            if df is not None:
-                rows = df.limit(max_rows + 1).collect()
-                info["clipped"] = len(rows) > max_rows
-                rows = rows[:max_rows]
-                info["columns"] = df.columns
-                info["rows"] = [list(r) for r in rows]
-                info["rowCount"] = len(rows)
-                try:
-                    info["sql"] = self.session.compile_to_sql(selected)
-                except Exception:
-                    pass
+                if df is not None:
+                    rows = df.limit(max_rows + 1).collect()
+                    info["clipped"] = len(rows) > max_rows
+                    rows = rows[:max_rows]
+                    info["columns"] = df.columns
+                    info["rows"] = [list(r) for r in rows]
+                    info["rowCount"] = len(rows)
+            info["sql"] = scope.sql
             info["status"] = "finished"
-            info["testResults"] = [
-                [ok, msg] for ok, msg in self.session.last_test_results]
+            info["testResults"] = [[ok, msg] for ok, msg in scope.test_results]
         except Exception as ex:
             info["error"] = {"message": str(ex)[:500],
                              "type": type(ex).__name__}

@@ -13,14 +13,111 @@ test-suite / driver to cross-check results.
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from wvlet_spark import nodes as N
-from wvlet_spark.analyzer import Analyzer, substitute_idents, transform, walk
+from wvlet_spark.analyzer import (Analyzer, cte_names, substitute_idents,
+                                  transform, walk)
 from wvlet_spark.generator import (DUCKDB, SPARK, CompileError, GenContext,
                                    SqlGenerator, _literal_kind)
-from wvlet_spark.parser import Parser, _SaveMarker
+from wvlet_spark.parser import Parser, _HoleRelation, _SaveMarker, _infer_format
+
+# staged view names come from one process-wide counter, so no two runs (in
+# any thread, of any session) stage under the same `__wv_*` name
+_VIEW_IDS = itertools.count(1)
+# the RunScopes entered in this thread or flow-stage task, innermost last;
+# a session stages into its innermost one
+_SCOPES: ContextVar[tuple[RunScope, ...]] = ContextVar("_SCOPES", default=())
+
+
+class RunScope:
+    """Everything one run creates: the views and lineage-cutting
+    checkpoints it staged, its `test` results, and `sql`, the Spark SQL of
+    the last query statement it ran.
+
+    `with ws.scope() as s: rows = ws.run(q).collect()` — runs of `ws`
+    inside the block stage into `s`; closing it drops the staged views,
+    unpersists exactly the RDDs this scope checkpointed and forgets their
+    cached schemas, so concurrent runs of one session neither see nor free
+    each other's state.  Collect inside the block: a frame that reads one
+    of the scope's checkpoints fails once it is unpersisted."""
+
+    def __init__(self, session: WvletSession, test_mode: bool):
+        self.session = session
+        self.test_mode = test_mode
+        self.test_results: list[tuple[bool, str]] = []
+        self.sql: str | None = None
+        self.views: list[str] = []
+        # connector -> its view for the current statement: a connector
+        # runs at most once per statement
+        self.conn: dict[str, str] = {}
+        self._rdds: list = []
+        self._tokens: list = []
+
+    def stage(self, df, kind: str, checkpoint: bool = False) -> str:
+        """Register `df` as the temp view `__wv_<kind>_<n>`, owned by this
+        scope; `checkpoint` first cuts its lineage with a lazy
+        localCheckpoint (computed once, on first use)."""
+        if checkpoint:
+            df = df.localCheckpoint(eager=False)
+            self._rdds.append(df._jdf.logicalPlan().rdd())
+        view = f"__wv_{kind}_{next(_VIEW_IDS)}"
+        df.createOrReplaceTempView(view)
+        self.views.append(view)
+        self.session._schema_cache[view] = df.columns
+        return view
+
+    def check(self, df, tests) -> None:
+        """Evaluate a statement's `test` assertions on `df` in test mode."""
+        if self.test_mode and tests:
+            from wvlet_spark.testing import evaluate_tests
+
+            self.test_results.extend(evaluate_tests(df, tests))
+
+    def release_conn(self) -> None:
+        """Drop the connector views of the last statement, so the next one
+        fetches fresh connector data (a frame built from them still
+        collects: it holds the analyzed plan, not the view name)."""
+        self._drop(set(self.conn.values()))
+        self.conn = {}
+
+    def close(self) -> None:
+        self._drop(set(self.views))
+        for rdd in self._rdds:
+            rdd.unpersist(False)
+        self.conn, self._rdds = {}, []
+
+    def _drop(self, views: set) -> None:
+        ws = self.session
+        for view in views:
+            ws.spark.catalog.dropTempView(view)
+            ws._tstats_cache.pop(view, None)
+            for col in ws._schema_cache.pop(view, None) or ():
+                ws._coltype_cache.pop(col, None)
+        self.views = [v for v in self.views if v not in views]
+
+    def __enter__(self) -> RunScope:
+        self._tokens.append(_SCOPES.set(_SCOPES.get() + (self,)))
+        return self
+
+    def __exit__(self, *exc) -> None:
+        _SCOPES.reset(self._tokens.pop())
+        self.close()
+
+
+@contextmanager
+def _current(scope: RunScope):
+    """Make `scope` its session's current scope while the block runs,
+    without closing it afterwards."""
+    token = _SCOPES.set(_SCOPES.get() + (scope,))
+    try:
+        yield scope
+    finally:
+        _SCOPES.reset(token)
 
 
 class WvletSession:
@@ -41,7 +138,7 @@ class WvletSession:
         self.analyzer.register(N.FunctionDef(
             "ulid_string", [], "string", N.NativeExpr("ulid_string", "string")))
         self.file_base = file_base
-        self.test_mode = test_mode
+        self.test_mode = test_mode   # the default of each run's scope
         self._schema_cache: dict[str, list[str]] = {}
         self._coltype_cache: dict[str, str] = {}
         # footer-stats cache for the join-order pass: resolving a table to
@@ -49,18 +146,15 @@ class WvletSession:
         # the session and invalidated whenever a statement writes a table
         self._tstats_cache: dict[str, object] = {}
         self._file_views: dict[str, str] = {}
-        self._view_n = 0
         self._watermarks: dict[str, object] = {}
         self._flows: dict[str, N.FlowDef] = {}
         self._flow_executor = None
         self._connectors: dict[str, object] = {}
-        self._conn_staged: dict[str, str] = {}   # connector -> staged view
         self._profiles: dict[str, object] = {}   # prefix -> table resolver
         # register_tool entries; the built-ins join on the first `call`, so
         # compiling never imports the operator library (pandas, pyspark.sql)
         self._tools: dict[str, object] = {}
         self._builtin_tools_loaded = False
-        self.last_test_results: list[tuple[bool, str]] = []
         if spark is not None:
             try:
                 # Spark 4.1 TIME type (wvlet `time`, TIME 'hh:mm:ss'
@@ -205,12 +299,13 @@ class WvletSession:
         list, `$name` from a dict)."""
         stmts = self.parse(text)
         sql = None
-        for stmt in stmts:
-            self.analyzer.register(stmt)
-            if isinstance(stmt, N.QueryStatement):
-                body = _bind_prepared_params(stmt.body, params) \
-                    if params is not None else stmt.body
-                sql = self._gen_sql(body, dialect)
+        with self._run_scope():
+            for stmt in stmts:
+                self.analyzer.register(stmt)
+                if isinstance(stmt, N.QueryStatement):
+                    body = _bind_prepared_params(stmt.body, params) \
+                        if params is not None else stmt.body
+                    sql = self._gen_sql(body, dialect)
         if sql is None:
             raise CompileError("no query statement found")
         return sql
@@ -293,7 +388,11 @@ class WvletSession:
             if isinstance(node, N.Show):
                 return N.TableRef(self._stage_show(node))
             if isinstance(node, N.Subscribe):
-                return self._stage_subscribe(node)
+                # batch incremental read: rows with wm < ts <= wm + window
+                # (reference: website/docs/index.md incremental processing)
+                from wvlet_spark.streaming import subscribe_filter
+
+                return subscribe_filter(self, node)
             if isinstance(node, N.TableRef) and node.name in self._connectors:
                 return N.TableRef(self._stage_connector(node.name))
             if isinstance(node, N.TableRef) and "." in node.name:
@@ -333,12 +432,21 @@ class WvletSession:
                 # wvlet models are valid tool inputs: the SUMMARIZE-over-
                 # subquery import path defines one and profiles it
                 # (round-8; previously a typed reject)
-                return self.run(f"from {name}")
+                return self.sql_df(N.TableRef(name))
             return self.spark.table(name)
 
-        def _one_table(fn, **fixed):
+        def _names(v) -> list[str]:
+            return [s.strip() for s in str(v).split(",")]
+
+        def _cast(kw: dict, ints=(), lists=()) -> dict:
+            """`call` arguments as the op takes them: `ints` cast to int,
+            `lists` split on commas."""
+            return {**kw, **{a: int(kw[a]) for a in ints if a in kw},
+                    **{a: _names(kw[a]) for a in lists if a in kw}}
+
+        def _one_table(fn, ints=(), lists=(), **fixed):
             def tool(spark, table, **kw):
-                return fn(_df(table), **{**fixed, **kw})
+                return fn(_df(table), **{**fixed, **_cast(kw, ints, lists)})
             return tool
 
         from wvlet_spark.ops import dedup, sampling, text
@@ -361,8 +469,7 @@ class WvletSession:
         from wvlet_spark.ops import sketches, similarity
 
         def tool_approx_distinct(spark, table, group, column, **kw):
-            groups = [g.strip() for g in str(group).split(",")]
-            return sketches.approx_distinct_by(_df(table), groups,
+            return sketches.approx_distinct_by(_df(table), _names(group),
                                                column, **kw)
 
         self._tools.update({
@@ -391,60 +498,29 @@ class WvletSession:
             return sampling.deterministic_sample(
                 _df(table), float(fraction), **kw)
 
-        def tool_epoch_shuffle(spark, table, epoch, **kw):
-            return sampling.epoch_shuffle(_df(table), int(epoch), **kw)
-
-        self._tools["epoch_shuffle"] = tool_epoch_shuffle
-
-        def tool_length_histogram(spark, table, **kw):
-            if "n_buckets" in kw:
-                kw["n_buckets"] = int(kw["n_buckets"])
-            return text.length_histogram(_df(table), **kw)
-
-        self._tools["length_histogram"] = tool_length_histogram
-
-        def tool_bloom_build(spark, table, **kw):
-            for a in ("m_bits", "k"):
-                if a in kw:
-                    kw[a] = int(kw[a])
-            return sketches.bloom_build(_df(table), **kw)
-
-        def tool_length_bins(spark, table, **kw):
-            if "n_bins" in kw:
-                kw["n_bins"] = int(kw["n_bins"])
-            return text.length_ntile_bins(_df(table), **kw)
-
-        self._tools["bloom_build"] = tool_bloom_build
-        self._tools["ngram_diversity"] = _one_table(text.ngram_diversity)
-        self._tools["length_bins"] = tool_length_bins
-
-        def tool_hard_negatives(spark, table, **kw):
-            for a in ("k", "anchor_mod"):
-                if a in kw:
-                    kw[a] = int(kw[a])
-            return similarity.hard_negative_mining(_df(table), **kw)
-
-        self._tools["hard_negatives"] = tool_hard_negatives
+        self._tools.update({
+            "epoch_shuffle": _one_table(sampling.epoch_shuffle,
+                                        ints=("epoch",)),
+            "length_histogram": _one_table(text.length_histogram,
+                                           ints=("n_buckets",)),
+            "bloom_build": _one_table(sketches.bloom_build,
+                                      ints=("m_bits", "k")),
+            "ngram_diversity": _one_table(text.ngram_diversity),
+            "length_bins": _one_table(text.length_ntile_bins,
+                                      ints=("n_bins",)),
+            "hard_negatives": _one_table(similarity.hard_negative_mining,
+                                         ints=("k", "anchor_mod")),
+        })
 
         from wvlet_spark.ops import analytics
 
-        def tool_funnel(spark, table, steps, **kw):
-            names = [s.strip() for s in str(steps).split(",")]
-            if "within_seconds" in kw:
-                kw["within_seconds"] = int(kw["within_seconds"])
-            return analytics.funnel(_df(table), names, **kw)
-
         def tool_fuzzy_pairs(spark, table, id, name, **kw):
-            for a in ("block_len", "max_dist", "block_cap"):
-                if a in kw:
-                    kw[a] = int(kw[a])
-            return dedup.fuzzy_name_pairs(_df(table), id, name, **kw)
+            return dedup.fuzzy_name_pairs(_df(table), id, name, **_cast(
+                kw, ints=("block_len", "max_dist", "block_cap")))
 
         def tool_skew_report(spark, table, keys, **kw):
-            cols = [c.strip() for c in str(keys).split(",")]
-            if "top_k" in kw:
-                kw["top_k"] = int(kw["top_k"])
-            return sketches.skew_report(_df(table), cols, **kw)
+            return sketches.skew_report(_df(table), _names(keys),
+                                        **_cast(kw, ints=("top_k",)))
 
         def tool_profile(spark, table, cols=None):
             # cols omitted / '*' -> every column (the SUMMARIZE import
@@ -453,18 +529,14 @@ class WvletSession:
             if cols is None or str(cols).strip() in ("*", ""):
                 names = list(df.columns)
             else:
-                names = [c.strip() for c in str(cols).split(",")]
+                names = _names(cols)
             return sketches.profile_numeric(df, names)
 
-        def tool_funnel_latency(spark, table, steps, **kw):
-            names = [s.strip() for s in str(steps).split(",")]
-            if "within_seconds" in kw:
-                kw["within_seconds"] = int(kw["within_seconds"])
-            return analytics.funnel_latency(_df(table), names, **kw)
-
+        funnel_args = dict(ints=("within_seconds",), lists=("steps",))
         self._tools.update({
-            "funnel": tool_funnel,
-            "funnel_latency": tool_funnel_latency,
+            "funnel": _one_table(analytics.funnel, **funnel_args),
+            "funnel_latency": _one_table(analytics.funnel_latency,
+                                         **funnel_args),
             "gap_fill": _one_table(analytics.gap_fill_daily),
             "retention": _one_table(analytics.retention_weekly),
             "fuzzy_pairs": tool_fuzzy_pairs,
@@ -547,19 +619,15 @@ class WvletSession:
         most once per statement no matter how many times the query
         references the name (reference: SourceTableStaging.scala /
         QueryExecutor.scala stage foreign tables into ULID-suffixed
-        run-scoped tables).  The ULID suffix also isolates concurrent
-        WvletSessions sharing one SparkSession."""
-        staged = self._conn_staged.get(name)
-        if staged is not None:
-            return staged
-        from wvlet_spark.analyzer import _ulid_string
-
-        df = self._connectors[name](self.spark)
-        view = ("__wv_conn_" + re.sub(r"[^A-Za-z0-9_]", "_", name)
-                + "_" + _ulid_string().lower())
-        df.createOrReplaceTempView(view)
-        self._schema_cache[view] = df.columns
-        self._conn_staged[name] = view
+        run-scoped tables).  The view belongs to the run's scope, and its
+        process-wide number isolates concurrent runs and WvletSessions
+        sharing one SparkSession."""
+        scope = self._scope()
+        view = scope.conn.get(name)
+        if view is None:
+            df = self._connectors[name](self.spark)
+            view = scope.conn[name] = scope.stage(
+                df, "conn_" + re.sub(r"[^A-Za-z0-9_]", "_", name))
         return view
 
     def _resolve_path(self, path: str) -> str:
@@ -589,24 +657,21 @@ class WvletSession:
                     body = s.body
             if body is None:
                 raise CompileError(f"no query found in {node.path}")
-            df = self.sql_df(body)
-        elif node.fmt == "json":
-            # wvlet's file scans accept JSON arrays (person.json style)
-            df = reader.option("multiLine", "true").json(path)
+            # the view outlives this run in `_file_views`, so the body
+            # stages into a scope of its own that is never closed
+            with _current(self.scope()):
+                df = self.sql_df(body)
+        elif node.fmt in ("json", "jsonl"):
+            # wvlet's file scans accept JSON arrays (the reference's
+            # person.json shape); .jsonl/.ndjson, the training-data
+            # interchange shape, is Spark's native line-per-record mode
+            if node.fmt == "json":
+                reader = reader.option("multiLine", "true")
+            df = reader.json(path)
             # Spark's JSON schema inference alphabetizes fields; the
             # reference preserves the first record's key order
             # (spec/basic/select-json.wv expects id,name,age). Peek at the
             # file head for the authored order and re-project.
-            order = _json_key_order(path)
-            if order:
-                cols = [c for c in order if c in df.columns]
-                cols += [c for c in df.columns if c not in cols]
-                df = df.select(*cols)
-        elif node.fmt == "jsonl":
-            # newline-delimited JSON: Spark's native line-per-record mode
-            # (the multiLine array form above is the reference's person.json
-            # shape; .jsonl/.ndjson is the training-data interchange shape)
-            df = reader.json(path)
             order = _json_key_order(path)
             if order:
                 cols = [c for c in order if c in df.columns]
@@ -629,8 +694,7 @@ class WvletSession:
             ])
         else:
             df = read_parquet_robust(self.spark, path)
-        self._view_n += 1
-        view = f"__wv_file_{self._view_n}"
+        view = f"__wv_file_{next(_VIEW_IDS)}"
         df.createOrReplaceTempView(view)
         self._file_views[key] = view
         self._file_views[node.path] = view
@@ -689,64 +753,66 @@ class WvletSession:
         if node.like:
             pat = re.compile("^" + node.like.replace("%", ".*").replace("_", ".") + "$", re.I)
             rows = [r for r in rows if pat.match(r[0])]
-        df = spark.createDataFrame(rows, schema)
-        self._view_n += 1
-        view = f"__wv_show_{self._view_n}"
-        df.createOrReplaceTempView(view)
-        self._schema_cache[view] = df.columns
-        return df and view
-
-    def _stage_subscribe(self, node: N.Subscribe) -> N.Relation:
-        """Batch incremental read: rows with wm < ts <= wm + window.
-        (reference semantics: website/docs/index.md incremental processing)"""
-        from wvlet_spark.streaming import subscribe_filter
-
-        return subscribe_filter(self, node)
+        return self._scope().stage(spark.createDataFrame(rows, schema), "show")
 
     # ------------------------------------------------------------- execute
 
     def run(self, text: str, params: list | tuple | dict | None = None):
         """Execute all statements; return the last result DataFrame (or None).
         `params` binds prepared-statement parameters (`?` / `$1`
-        positionally from a list, `$name` from a dict)."""
+        positionally from a list, `$name` from a dict).  Inside
+        `with ws.scope() as s:` the run stages its views into `s`, which
+        also collects its test results and SQL (see `scope()`)."""
         stmts = self.parse(text)
         result = None
-        self.last_test_results = []
-        for stmt in stmts:
-            result = self._run_stmt(stmt, params=params) or result
+        with self._run_scope() as scope:
+            for stmt in stmts:
+                scope.release_conn()  # a new statement sees fresh connector data
+                result = self._run_stmt(stmt, params=params) or result
         return result
 
+    def scope(self, test_mode: bool | None = None) -> RunScope:
+        """A new RunScope to run in (`with ws.scope() as s: ...`);
+        `test_mode` (evaluate `test` assertions) defaults to the
+        session's."""
+        return RunScope(self, self.test_mode if test_mode is None
+                        else test_mode)
+
+    def _scope(self) -> RunScope:
+        """The current scope, else a new one nobody closes."""
+        for scope in reversed(_SCOPES.get()):
+            if scope.session is self:
+                return scope
+        return self.scope()
+
+    @contextmanager
+    def _run_scope(self):
+        """The current scope, else a new one made current for the block.
+        That one is never closed, so the frame a bare `run` returns keeps
+        its checkpoints for the session; only its connector views, which
+        nothing names once the block ends, are dropped."""
+        scope = self._scope()
+        if scope in _SCOPES.get():
+            yield scope
+            return
+        with _current(scope):
+            try:
+                yield scope
+            finally:
+                scope.release_conn()
+
     def _run_stmt(self, stmt: N.Statement, params=None):
-        # connector staging is statement-scoped: a new statement sees fresh
-        # connector data (one invocation), and the previous statement's
-        # run-scoped views are dropped
-        if self._conn_staged and self.spark is not None:
-            for view in self._conn_staged.values():
-                try:
-                    self.spark.catalog.dropTempView(view)
-                except Exception:
-                    pass
-                # keep the schema caches in lockstep with the catalog:
-                # dead staged-view names would otherwise accumulate across
-                # statements and degrade column_type() scans over a long
-                # session (each dead entry costs a caught spark.table()
-                # failure per lookup)
-                self._schema_cache.pop(view, None)
-            self._conn_staged.clear()
-            self._coltype_cache.clear()
         if isinstance(stmt, (N.SaveTo, N.AppendTo, N.DeleteStmt, N.InsertStmt,
                              N.TruncateStmt, N.ExecuteStmt)):
             # table contents are about to change — footer stats go stale
             self._tstats_cache.clear()
-        if isinstance(stmt, (N.ModelDef, N.FunctionDef, N.PartialQueryDef, N.TypeDef)):
+        if isinstance(stmt, (N.ModelDef, N.FunctionDef, N.PartialQueryDef,
+                             N.TypeDef, N.ValDef)):
             self.analyzer.register(stmt)
             return None
         if isinstance(stmt, N.DeallocateStmt):
             if self.analyzer.models.pop(stmt.name, None) is None:
                 raise CompileError(f"unknown model: {stmt.name}")
-            return None
-        if isinstance(stmt, N.ValDef):
-            self.analyzer.register(stmt)
             return None
         if isinstance(stmt, N.ImportStmt):
             return None
@@ -770,11 +836,10 @@ class WvletSession:
                 # statements (reference spec/basic/select-as.wv)
                 self.analyzer.register(N.ModelDef(body.alias, [], body.child))
                 body = body.child
-            df = self.sql_df(body, params=params)
-            if self.test_mode and stmt.tests:
-                from wvlet_spark.testing import evaluate_tests
-
-                self.last_test_results.extend(evaluate_tests(df, stmt.tests))
+            scope = self._scope()
+            scope.sql = self._lower(body, params)
+            df = self._spark_sql(scope.sql)
+            scope.check(df, stmt.tests)
             return df
         if isinstance(stmt, N.SaveTo):
             df = self.sql_df(stmt.child)
@@ -828,9 +893,8 @@ class WvletSession:
                 self._builtin_tools_loaded = True
             if stmt.name not in self._tools:
                 raise CompileError(f"unknown tool: {stmt.name}")
-            kwargs = {}
-            for k, v in stmt.args.items():
-                kwargs[k] = v.value if isinstance(v, N.Literal) else v
+            kwargs = {k: v.value if isinstance(v, N.Literal) else v
+                      for k, v in stmt.args.items()}
             return self._tools[stmt.name](self.spark, **kwargs)
         raise CompileError(f"cannot execute statement {type(stmt).__name__}")
 
@@ -858,34 +922,19 @@ class WvletSession:
                 if pname and pname not in args:
                     args[pname] = ex._const(v, None)
         summary = ex.run(flow, args, resume_run_id=stmt.resume_run_id)
-        from pyspark.sql.types import (IntegerType, StringType, StructField,
-                                       StructType)
-
-        schema = StructType([
-            StructField("stage", StringType()),
-            StructField("state", StringType()),
-            StructField("attempts", IntegerType()),
-            StructField("error", StringType()),
-            StructField("run_id", StringType()),
-        ])
         rows = [(s["stage"], s["state"], s["attempts"], s["error"], s["run_id"])
                 for s in summary]
-        df = self.spark.createDataFrame(rows, schema)
+        df = self.spark.createDataFrame(rows, "stage string, state string, "
+                                        "attempts int, error string, "
+                                        "run_id string")
         if stmt.pipe is not None or stmt.tests:
-            from wvlet_spark.parser import _HoleRelation
-
-            self._view_n += 1
-            view = f"__wv_flowrun_{self._view_n}"
-            df.createOrReplaceTempView(view)
-            self._schema_cache[view] = df.columns
+            scope = self._scope()
+            view = scope.stage(df, "flowrun")
             if stmt.pipe is not None:
                 def fill(n):
                     return N.TableRef(view) if isinstance(n, _HoleRelation) else n
                 df = self.sql_df(transform(stmt.pipe, rel_fn=fill))
-            if self.test_mode and stmt.tests:
-                from wvlet_spark.testing import evaluate_tests
-
-                self.last_test_results.extend(evaluate_tests(df, stmt.tests))
+            scope.check(df, stmt.tests)
         return df
 
     def expr_sql(self, e: N.Expr) -> str:
@@ -902,6 +951,10 @@ class WvletSession:
         return self.sql_df(rel)
 
     def sql_df(self, rel: N.Relation, params=None):
+        return self._spark_sql(self._lower(rel, params))
+
+    def _lower(self, rel: N.Relation, params=None) -> str:
+        """Stage what `rel` needs into the run's scope, return its SQL."""
         # run debug side-channels eagerly (they print, input passes through)
         self._run_debugs(rel)
         # describe nodes (top-level or mid-pipe) materialize the child's
@@ -912,7 +965,9 @@ class WvletSession:
             rel = transform(rel, rel_fn=self._stage_describe)
         rel = self._stage_agg_in_subqueries(rel, params)
         rel = self._stage_multi_ref_ctes(rel, params)
-        sql = self._gen_sql(rel, SPARK, params=params)
+        return self._gen_sql(rel, SPARK, params=params)
+
+    def _spark_sql(self, sql: str):
         try:
             return self.spark.sql(sql)
         except Exception as ex:
@@ -951,8 +1006,7 @@ class WvletSession:
         standalone, a CTE name that shadows a real table would silently
         resolve to the TABLE (wrong relation), so any name collision
         disqualifies staging."""
-        cte_names = {name.lower() for n in walk(rel)
-                     if isinstance(n, N.WithQuery) for name, _q in n.defs}
+        ctes = {name.lower() for name in cte_names(rel)}
 
         def expr_fn(e: N.Expr) -> N.Expr:
             if not isinstance(e, N.InSubquery):
@@ -960,19 +1014,16 @@ class WvletSession:
             if not _tree_contains(e.query, (N.GroupBy, N.Agg, N.Dedup,
                                             N.CountRel)):
                 return e
-            if cte_names and any(isinstance(n, N.TableRef)
-                                 and n.name.lower() in cte_names
-                                 for n in walk(e.query)):
+            if ctes and any(isinstance(n, N.TableRef)
+                            and n.name.lower() in ctes
+                            for n in walk(e.query)):
                 return e
             try:
                 sub_sql = self._gen_sql(e.query, SPARK, params=params)
-                df = self.spark.sql(sub_sql).localCheckpoint(eager=False)
+                view = self._scope().stage(self.spark.sql(sub_sql), "insub",
+                                           checkpoint=True)
             except Exception:
                 return e
-            self._view_n += 1
-            view = f"__wv_insub_{self._view_n}"
-            df.createOrReplaceTempView(view)
-            self._schema_cache[view] = df.columns
             return N.InSubquery(e.expr, N.TableRef(view), e.negated)
 
         return transform(rel, expr_fn=expr_fn)
@@ -1055,14 +1106,11 @@ class WvletSession:
                 continue
             try:
                 sub_sql = self._gen_sql(q, SPARK, params=params)
-                df = self.spark.sql(sub_sql).localCheckpoint(eager=False)
+                view = self._scope().stage(self.spark.sql(sub_sql), "cte",
+                                           checkpoint=True)
             except Exception:
                 kept_defs.append((name, q))
                 continue
-            self._view_n += 1
-            view = f"__wv_cte_{self._view_n}"
-            df.createOrReplaceTempView(view)
-            self._schema_cache[view] = df.columns
             for j, (dn, dq) in enumerate(later_defs):
                 defs[i + 1 + j] = (dn, rename_refs(dq, name.lower(),
                                                    view, name))
@@ -1076,18 +1124,18 @@ class WvletSession:
             return self._stage_describe_prepared(node)
         if not isinstance(node, N.Describe):
             return node
+        df = self._schema_frame(self._gen_sql(node.child, SPARK))
+        return N.TableRef(self._scope().stage(df, "desc"))
+
+    def _schema_frame(self, sql: str):
+        """(column_name, column_type) rows of `sql`'s schema, with wvlet
+        type names."""
         from wvlet_spark.printer import _type_name
 
-        inner_sql = self._gen_sql(node.child, SPARK)
-        schema = self.spark.sql(inner_sql).schema
-        rows = [(f.name, _type_name(f.dataType)) for f in schema.fields]
-        df = self.spark.createDataFrame(
-            rows, "column_name string, column_type string")
-        self._view_n += 1
-        view = f"__wv_desc_{self._view_n}"
-        df.createOrReplaceTempView(view)
-        self._schema_cache[view] = df.columns
-        return N.TableRef(view)
+        schema = self.spark.sql(sql).schema
+        return self.spark.createDataFrame(
+            [(f.name, _type_name(f.dataType)) for f in schema.fields],
+            "column_name string, column_type string")
 
     def _stage_describe_prepared(self, node: N.DescribePrepared
                                  ) -> N.Relation:
@@ -1115,13 +1163,9 @@ class WvletSession:
                         seen.append((pos, "unknown"))
             for i, (pname, ptype, _d) in enumerate(mdl.params or []):
                 seen.append((i + 1, ptype or "unknown"))
-            rows = sorted(set(seen)) or []
-            df = self.spark.createDataFrame(
-                rows, "position int, type string") if rows else \
-                self.spark.createDataFrame([], "position int, type string")
+            df = self.spark.createDataFrame(sorted(set(seen)),
+                                            "position int, type string")
         else:
-            from wvlet_spark.printer import _type_name
-
             def null_bind(n):
                 if isinstance(n, N.Param):
                     return N.Literal(None, "null")
@@ -1129,15 +1173,8 @@ class WvletSession:
 
             body = transform(deepcopy(mdl.body), expr_fn=null_bind)
             body = self.analyzer.resolve(body, (node.name,))
-            schema = self.spark.sql(self._gen_sql(body, SPARK)).schema
-            rows = [(f.name, _type_name(f.dataType)) for f in schema.fields]
-            df = self.spark.createDataFrame(
-                rows, "column_name string, column_type string")
-        self._view_n += 1
-        view = f"__wv_desc_{self._view_n}"
-        df.createOrReplaceTempView(view)
-        self._schema_cache[view] = df.columns
-        return N.TableRef(view)
+            df = self._schema_frame(self._gen_sql(body, SPARK))
+        return N.TableRef(self._scope().stage(df, "desc"))
 
     def _run_debugs(self, rel: N.Relation) -> None:
         # reversed pre-order: an upstream debug in a pipe runs first
@@ -1145,12 +1182,8 @@ class WvletSession:
         for d in reversed(debugs):
             body = d.body if d.body is not None else d.child
             try:
-                from wvlet_spark.parser import _HoleRelation
-
                 def fill(n):
                     return d.child if isinstance(n, _HoleRelation) else n
-
-                from wvlet_spark.parser import _SaveMarker
 
                 if isinstance(body, _SaveMarker):
                     # a save inside debug executes for real — the main pipe
@@ -1329,8 +1362,6 @@ def _parse_byte_conf(v) -> int | None:
     """Spark size-conf string -> bytes ("10485760", "10MB", "10m", "-1");
     None when unparseable.  Bare numbers are bytes (Spark's convention
     for autoBroadcastJoinThreshold)."""
-    import re
-
     if v is None:
         return None
     s = str(v).strip().lower()
@@ -1413,38 +1444,25 @@ def read_parquet_robust(spark, path: str):
     which Spark's parquet reader rejects: read nanos as long
     (spark.sql.legacy.parquet.nanosAsLong) and convert to timestamp columns
     losslessly at microsecond precision. Stays fully distributed — the
-    conversion is a projected expression, not a driver-side rewrite."""
+    conversion is a projected expression, not a driver-side rewrite.
+    `path` may be a file or a directory of part files."""
     ns_cols: list[str] = []
     try:
-        import pyarrow.parquet as pq
         import pyarrow as pa
+        import pyarrow.dataset as ds
 
-        schema = pq.read_schema(path)
-        for f in schema:
+        for f in ds.dataset(path, format="parquet").schema:
             if isinstance(f.type, pa.TimestampType) and f.type.unit == "ns":
                 ns_cols.append(f.name)
     except Exception:
-        pass
+        pass  # a path pyarrow cannot open (remote, glob): Spark reads it
     if not ns_cols:
         return spark.read.parquet(path)
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        from pyspark.sql import functions as F
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    from pyspark.sql import functions as F
 
-        for c in ns_cols:
-            df = df.withColumn(c, F.expr(f"timestamp_micros(CAST(`{c}` DIV 1000 AS LONG))"))
-        return df
-    except Exception:
-        # fallback: arrow-side conversion (driver memory; small tables only)
-        import pyarrow.parquet as pq
+    for c in ns_cols:
+        df = df.withColumn(c, F.expr(f"timestamp_micros(CAST(`{c}` DIV 1000 AS LONG))"))
+    return df
 
-        tbl = pq.read_table(path)
-        pdf = tbl.to_pandas()
-        return spark.createDataFrame(pdf)
-
-
-def _infer_format(path: str) -> str:
-    # single source of truth with the scan side (from 'file.X')
-    from wvlet_spark.parser import _infer_format as scan_infer
-    return scan_infer(path)

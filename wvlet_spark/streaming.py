@@ -259,23 +259,22 @@ def windowed_agg_stream(spark, source_path: str, target_path: str,
     swapped atomically (read-current, anti-join updated keys, union,
     write-tmp, rename) — the state/merge split is identical either way.
     Returns the StreamingQuery."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    group_cols = group_cols or []
     stream = read_stream(spark, source_path, watermark_column=ts_col,
                          delay=watermark_delay)
-    w = F.window(F.col(ts_col).cast("timestamp"), window)
-    agg = (stream.groupBy(w.alias("win"), *group_cols)
-           .agg(F.count("*").alias("n_events"),
-                F.sum(value_col).alias("total_value"))
-           .select(F.col("win.start").alias("window_start"),
-                   F.col("win.end").alias("window_end"),
-                   *group_cols, "n_events", "total_value"))
+    agg = windowed_agg_batch(stream, ts_col, window, group_cols, value_col)
+    return _upsert_stream(agg, ["window_start", *(group_cols or [])],
+                          target_path, checkpoint_path, available_now,
+                          target_table)
 
-    keys = ["window_start", *group_cols]
+
+def _upsert_stream(agg, keys: list[str], target_path: str,
+                   checkpoint_path: str, available_now: bool,
+                   target_table: str | None = None):
+    """Start `agg` in update mode, upserting each micro-batch by `keys`
+    into `target_table` (a MERGE INTO, when it supports one) or else into
+    the parquet directory `target_path`, swapped atomically."""
+    import os
+    import shutil
 
     def merge(batch_df, _batch_id):
         if batch_df.isEmpty():
@@ -399,51 +398,15 @@ def enriched_agg_stream(spark, source_path: str, dim_df, target_path: str,
     100 TB story: the enrichment join never shuffles the stream (static
     side broadcasts); state is bounded by (windows x attribute values);
     the sink merge is upsert-by-key exactly as the plain windowed agg."""
-    import os
-    import shutil
-
     from pyspark.sql import functions as F
 
     stream = read_stream(spark, source_path, watermark_column=ts_col,
                          delay=watermark_delay)
     dim = dim_df.select(F.col(dim_key).alias(stream_key), enrich_col)
     joined = stream.join(F.broadcast(dim), on=stream_key, how="inner")
-    w = F.window(F.col(ts_col).cast("timestamp"), window)
-    agg = (joined.groupBy(w.alias("win"), enrich_col)
-           .agg(F.count("*").alias("n_events"),
-                F.sum(value_col).alias("total_value"))
-           .select(F.col("win.start").alias("window_start"),
-                   F.col("win.end").alias("window_end"),
-                   enrich_col, "n_events", "total_value"))
-
-    keys = ["window_start", enrich_col]
-
-    def merge(batch_df, _batch_id):
-        if batch_df.isEmpty():
-            return
-        sess = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()
-        if os.path.isdir(target_path):
-            cur = sess.read.parquet(target_path)
-            merged = (cur.join(batch_df.select(*keys).distinct(),
-                               on=keys, how="left_anti")
-                      .unionByName(batch_df))
-        else:
-            merged = batch_df
-        tmp = target_path.rstrip("/") + ".__tmp__"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = target_path.rstrip("/") + ".__old__"
-        if os.path.isdir(target_path):
-            os.rename(target_path, old)
-        os.rename(tmp, target_path)
-        shutil.rmtree(old, ignore_errors=True)
-
-    writer = (agg.writeStream.outputMode("update")
-              .option("checkpointLocation", checkpoint_path)
-              .foreachBatch(merge))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    agg = windowed_agg_batch(joined, ts_col, window, [enrich_col], value_col)
+    return _upsert_stream(agg, ["window_start", enrich_col], target_path,
+                          checkpoint_path, available_now)
 
 
 def near_dup_filter_batch(df, text_col: str = "text", id_col: str = "doc_id",
