@@ -128,3 +128,21 @@ def test_test_session_runs_the_engine_configuration(spark):
     conf = spark_conf(SF_DIR, CPUS)
     assert spark.sparkContext.master == conf.pop("spark.master")
     assert {k: spark.conf.get(k) for k in conf} == conf
+
+
+def test_make_spark_keeps_a_running_context(spark):
+    """A second make_spark joins the running SparkContext: the session
+    reports the master it runs, not the one asked for."""
+    from tests.conftest import CPUS, SF_DIR
+
+    from wvlet_spark.config import make_spark
+
+    master = spark.sparkContext.master
+    try:
+        again = make_spark(SF_DIR, CPUS + 1)
+        assert again.sparkContext.master == master
+        assert again.conf.get("spark.master") == master
+        assert again.conf.get("spark.sql.shuffle.partitions") == \
+            spark_conf(SF_DIR, CPUS + 1)["spark.sql.shuffle.partitions"]
+    finally:
+        make_spark(SF_DIR, CPUS)

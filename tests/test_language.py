@@ -307,6 +307,9 @@ def test_in_query_test_failure(ws):
 
     with pytest.raises(TestFailure):
         ws.run("from [[1]] as t(x)\ntest _.size should be 99")
+    with pytest.raises(TestFailure):
+        ws.run("with a as { from [[1]] as t(x) } from a\n"
+               "test _.size should be 99")
 
 
 def test_save_and_read_table(ws):
@@ -493,14 +496,16 @@ def test_connector_views_last_one_statement(spark):
     assert not [v for v in ws._schema_cache if v.startswith("__wv_conn_")]
     assert [df.collect()[0][0] for df in dfs] == [1] * 5
     with ws.scope() as s:
-        ws.run("from ext.x select v")
-        assert ws.column_type("v") == "bigint"
-        data.update(rows=[("a",)], schema="v string")
+        # the lowering follows the type the connector gives `v` now
+        data.update(rows=[([1, 2],)], schema="v array<bigint>")
+        assert ws.run("from ext.x select n = len(v)").collect()[0].n == 2
+        assert "size(v)" in s.sql
+        data.update(rows=[("abc",)], schema="v string")
         for _ in range(3):
-            ws.run("from ext.x select v")
+            assert ws.run("from ext.x select n = len(v)").collect()[0].n == 3
+            assert "size(" not in s.sql
         assert conn_views() - before == set(s.conn.values())
         assert len(s.conn) == 1
-        assert ws.column_type("v") == "string"
     assert conn_views() == before
 
 
@@ -779,8 +784,9 @@ def test_avg_decimal_huge_sum_no_overflow(spark):
 
 
 def test_column_type_ambiguous_duplicate_names(spark):
-    """A bare column name that resolves in several tables with DIFFERENT
-    types must not drive a type-directed rewrite (wrong-scale cast)."""
+    """A column name that several tables carry with DIFFERENT types takes
+    the type of the table the query reads: each decimal sum is cast at
+    its own table's scale."""
     from decimal import Decimal
 
     from wvlet_spark import WvletSession
@@ -790,20 +796,62 @@ def test_column_type_ambiguous_duplicate_names(spark):
     spark.createDataFrame([(Decimal("1.23456"),)], "x decimal(12,5)") \
         .createOrReplaceTempView("amb_b")
     ws = WvletSession(spark)
-    assert ws.table_columns("amb_a") == ["x"]
-    assert ws.table_columns("amb_b") == ["x"]
-    assert ws.column_type("x") is None
-    # same-typed duplicates stay resolvable
+    assert ws.table_schema("amb_a") == {"x": "decimal(10,2)"}
+    assert ws.table_schema("amb_b") == {"x": "decimal(12,5)"}
+    assert "CAST(sum(x) AS DECIMAL(38,2))" in \
+        ws.compile_to_sql("from amb_a agg x.sum")
+    assert "CAST(sum(x) AS DECIMAL(38,5))" in \
+        ws.compile_to_sql("from amb_b agg x.sum")
+    assert ws.run("from amb_b agg s = x.sum").collect()[0].s == \
+        Decimal("1.23456")
+    # same-typed duplicates keep their type through a join
     spark.createDataFrame([(Decimal("9.99"),)], "y decimal(10,2)") \
         .createOrReplaceTempView("amb_c")
     spark.createDataFrame([(Decimal("8.88"),)], "y decimal(10,2)") \
         .createOrReplaceTempView("amb_d")
     ws2 = WvletSession(spark)
-    assert ws2.table_columns("amb_c") == ["y"]
-    assert ws2.table_columns("amb_d") == ["y"]
-    assert ws2.column_type("y") == "decimal(10,2)"
+    assert "CAST(sum(y) AS DECIMAL(38,2))" in ws2.compile_to_sql(
+        "from amb_c natural join amb_d agg y.sum")
     for v in ("amb_a", "amb_b", "amb_c", "amb_d"):
         spark.catalog.dropTempView(v)
+
+
+def test_column_types_come_from_the_relation(spark):
+    """A column's type is the one the relation being compiled gives it,
+    not that of a same-named column elsewhere in the catalog: `embedding`
+    is an array in `embeddings` but a string below, and `x` is a double
+    below but a decimal in `dec_t`."""
+    from decimal import Decimal
+
+    from tests.conftest import SF_DIR
+    from wvlet_spark import WvletSession
+
+    spark.createDataFrame([(Decimal("1.23"),)], "x decimal(10,2)") \
+        .createOrReplaceTempView("dec_t")
+    ws = WvletSession(spark, table_dir=SF_DIR)
+    try:
+        assert ws.table_schema("dec_t") == {"x": "decimal(10,2)"}
+        for q in ["from documents add embedding = 'abc' "
+                  "select len(embedding) as n",
+                  "with e as { from documents add embedding = 'abc' } "
+                  "from e select len(embedding) as n"]:
+            assert "size(" not in ws.compile_to_sql(q)
+            assert {r.n for r in ws.run(q).collect()} == {3}
+        assert "size(embedding)" in ws.compile_to_sql(
+            "from embeddings select len(embedding)")
+        q = ("from documents add x = n_chars / 3.0 group by lang "
+             "agg s = x.sum, a = x.avg order by lang")
+        assert "DECIMAL" not in ws.compile_to_sql(q)
+        want = spark.sql(
+            "SELECT lang, sum(n_chars / 3.0D) AS s, avg(n_chars / 3.0D) AS a"
+            " FROM documents GROUP BY lang ORDER BY lang").collect()
+        got = ws.run(q).collect()
+        assert [r.lang for r in got] == [r.lang for r in want]
+        for g, w in zip(got, want):
+            assert (g.s, g.a) == (pytest.approx(w.s, rel=1e-12),
+                                  pytest.approx(w.a, rel=1e-12))
+    finally:
+        spark.catalog.dropTempView("dec_t")
 
 
 def test_save_with_partition_by_and_compression(spark, tmp_path):

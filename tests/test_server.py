@@ -214,10 +214,10 @@ def test_concurrent_requests_match_sequential(spark):
     from wvlet_spark.server import WvletServer
     from wvlet_spark.suite import SUITE
 
-    # (a test after a `with` query is not evaluated, so those stay out)
-    names = [n for n in SUITE if n != "flow_dag_run"
-             and not SUITE[n][0].lstrip().startswith("with")][:19]
-    names += ["tpch_q18"]  # in_subquery is among the first 19
+    names = [n for n in SUITE if n != "flow_dag_run"][:19]
+    # tpch_q18 (in_subquery is among the first 19) and two `with … from …`
+    # queries, whose trailing `test` runs too
+    names += ["tpch_q18", "tpch_q15", "tpcds_q44_best_worst"]
     reqs = {n: {"query": SUITE[n][0] + "\ntest _.size >= 0",
                 "isTestRun": i % 2 == 0, "maxRows": 100_000}
             for i, n in enumerate(names)}

@@ -215,7 +215,7 @@ class Analyzer:
 
         out = transform(rel, expr_fn=expr_fn, rel_fn=rel_fn)
         out, _ = _strip_asof_aliases(
-            out, getattr(self, "table_columns", None))
+            out, getattr(self, "table_schema", None))
         return out
 
     # -- models ---------------------------------------------------------------
@@ -375,19 +375,19 @@ def _asof_side_alias(rel) -> str | None:
     return None
 
 
-def _infer_static_columns(rel, table_columns) -> list[str] | None:
+def _infer_static_columns(rel, table_schema):
     """Best-effort static output-column inference for an asof-join side:
-    table refs resolve through the session catalog, aliased subqueries
-    use their column list or their final projection's item names.
+    table refs resolve through the session catalog (a name -> type dict),
+    aliased subqueries use their column list or their projection's names.
     Returns None when the shape is not statically known."""
     if isinstance(rel, N.AliasedRelation):
         if rel.columns:
             return list(rel.columns)
-        return _infer_static_columns(rel.child, table_columns)
+        return _infer_static_columns(rel.child, table_schema)
     if isinstance(rel, N.ParenRelation):
-        return _infer_static_columns(rel.child, table_columns)
+        return _infer_static_columns(rel.child, table_schema)
     if isinstance(rel, N.TableRef):
-        return table_columns(rel.name) if table_columns else None
+        return table_schema(rel.name) if table_schema else None
     if isinstance(rel, N.Project):
         names = []
         for it in rel.items:
@@ -403,11 +403,11 @@ def _infer_static_columns(rel, table_columns) -> list[str] | None:
         return names
     if isinstance(rel, (N.Filter, N.Sort, N.Limit, N.Offset, N.Dedup,
                         N.Sample)):
-        return _infer_static_columns(rel.child, table_columns)
+        return _infer_static_columns(rel.child, table_schema)
     return None
 
 
-def _strip_asof_aliases(rel, table_columns=None):
+def _strip_asof_aliases(rel, table_schema=None):
     """The Spark asof-join lowering flattens both sides into an unqualified
     projection, so `stock.price` written AFTER an asof join can no longer
     resolve by qualifier (reference keeps aliases visible —
@@ -429,19 +429,19 @@ def _strip_asof_aliases(rel, table_columns=None):
     if isinstance(rel, N.Join) and rel.asof:
         la = _asof_side_alias(rel.left)
         ra = _asof_side_alias(rel.right)
-        lcols = _infer_static_columns(rel.left, table_columns)
-        rcols = _infer_static_columns(rel.right, table_columns)
+        lcols = _infer_static_columns(rel.left, table_schema)
+        rcols = _infer_static_columns(rel.right, table_schema)
         dups = (set(lcols) & set(rcols)) if lcols and rcols else set()
         return rel, ({la} if la else set(), {ra} if ra else set(), dups)
     if isinstance(rel, N.WithQuery):
-        body2, aliases = _strip_asof_aliases(rel.body, table_columns)
+        body2, aliases = _strip_asof_aliases(rel.body, table_schema)
         if body2 is not rel.body:
             rel = dataclasses.replace(rel, body=body2)
         return rel, aliases
     child = getattr(rel, "child", None)
     if not isinstance(child, N.Relation):
         return rel, NOA
-    child2, aliases = _strip_asof_aliases(child, table_columns)
+    child2, aliases = _strip_asof_aliases(child, table_schema)
     if child2 is not child:
         rel = dataclasses.replace(rel, child=child2)
     left_aliases, right_aliases, dups = aliases

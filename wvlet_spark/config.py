@@ -125,13 +125,19 @@ def spark_conf(table_dir: str | None, cpus: int) -> dict[str, str]:
 def make_spark(table_dir: str | None = None, cpus: int | None = None, *,
                warehouse_dir: str | None = None):
     """The local SparkSession for inputs under `table_dir` on `cpus` task
-    threads (an existing session is reused, as getOrCreate does)."""
+    threads.  An existing session is reused, as getOrCreate does: its
+    running SparkContext keeps its master, heap and JVM options, so only
+    the runtime `spark.sql.*` settings are applied to it."""
+    from pyspark import SparkContext
     from pyspark.sql import SparkSession
 
     conf = spark_conf(table_dir, default_cpus() if cpus is None else cpus)
     if warehouse_dir is not None:
         conf["spark.sql.warehouse.dir"] = warehouse_dir
-    spark = SparkSession.builder.appName("wvlet_spark").config(
-        map=conf).getOrCreate()
+    if SparkContext._active_spark_context is None:
+        conf["spark.app.name"] = "wvlet_spark"
+    else:
+        conf = {k: v for k, v in conf.items() if k.startswith("spark.sql.")}
+    spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark

@@ -743,9 +743,6 @@ class FlowScheduler:
             raise ValueError(f"flow {flow.name!r} has no cron schedule")
         self._jobs.append((flow, expr))
 
-    def next_fires(self, now: tuple) -> list[tuple[str, tuple]]:
-        return [(flow.name, cron_next_fire(expr, now)) for flow, expr in self._jobs]
-
     def start(self, poll_s: float = 30.0):
         def loop():
             import datetime as dt

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from wvlet_spark import nodes as N
 from wvlet_spark.lexer import WvletSyntaxError
@@ -399,21 +399,21 @@ def _c_fmt_to_java(fmt: str) -> str:
     return "".join(out)
 
 
-def _maybe_fractional_numeric(e, col_fn=None) -> bool:
+def _maybe_fractional_numeric(e, type_of=None) -> bool:
     """True only for expressions that are PROVABLY numeric and may carry a
     fractional part — the precondition for the DuckDB-side trunc() wrap in
     integer casts (trunc of a VARCHAR would error, so this must never
-    fire on possibly-string expressions).  col_fn, when provided, is the
-    session's bare-column-name -> Spark type lookup (parquet footers), so
-    plain double/decimal COLUMN refs qualify too (wide-fuzz find:
+    fire on possibly-string expressions).  type_of, when provided, gives a
+    column reference's Spark type in the block being rendered, so plain
+    double/decimal COLUMN refs qualify too (wide-fuzz find:
     l_extendedprice::long truncated on Spark but rounded on DuckDB)."""
     if isinstance(e, N.ArithmeticOp):
         if e.op == "/":
             return True
-        return (_maybe_fractional_numeric(e.left, col_fn)
-                or _maybe_fractional_numeric(e.right, col_fn))
+        return (_maybe_fractional_numeric(e.left, type_of)
+                or _maybe_fractional_numeric(e.right, type_of))
     if isinstance(e, N.UnaryOp):
-        return _maybe_fractional_numeric(e.expr, col_fn)
+        return _maybe_fractional_numeric(e.expr, type_of)
     if isinstance(e, N.Literal):
         return e.kind == "float"
     if isinstance(e, N.Cast):
@@ -424,33 +424,33 @@ def _maybe_fractional_numeric(e, col_fn=None) -> bool:
         if n in _FRACTIONAL_FNS:
             return True
         if n in _NUMERIC_THROUGH_FNS:
-            return any(_maybe_fractional_numeric(a, col_fn) for a in e.args)
+            return any(_maybe_fractional_numeric(a, type_of) for a in e.args)
         return False
     if isinstance(e, N.MethodCall):
         if e.method.lower() in ("avg", "mean"):
             return True
         if e.method.lower() in ("sum", "min", "max"):
-            return _maybe_fractional_numeric(e.target, col_fn)
+            return _maybe_fractional_numeric(e.target, type_of)
         return False
     if isinstance(e, N.IfExpr):
-        return (_maybe_fractional_numeric(e.then, col_fn)
+        return (_maybe_fractional_numeric(e.then, type_of)
                 or (e.otherwise is not None
-                    and _maybe_fractional_numeric(e.otherwise, col_fn)))
+                    and _maybe_fractional_numeric(e.otherwise, type_of)))
     if isinstance(e, N.CaseExpr):
         branches = [v for _c, v in e.whens]
         if e.otherwise is not None:
             branches.append(e.otherwise)
-        return any(_maybe_fractional_numeric(b, col_fn) for b in branches)
-    if col_fn is not None and isinstance(e, (N.Ident, N.Ref)):
-        name = e.name.split(".")[-1]
-        t = col_fn(name)
-        if t is None:
-            return False
-        if t in ("double", "float"):
-            return True
-        m = re.match(r"decimal\(\d+,(\d+)\)", t)
-        return bool(m) and int(m.group(1)) > 0
-    return False
+        return any(_maybe_fractional_numeric(b, type_of) for b in branches)
+    t = type_of(e) if type_of is not None else None
+    if t in ("double", "float"):
+        return True
+    return (_decimal_scale(t) or 0) > 0
+
+
+def _decimal_scale(t: str | None) -> int | None:
+    """Scale of a decimal type's simpleString, else None."""
+    m = re.match(r"decimal\(\d+,(\d+)\)", t or "")
+    return int(m.group(1)) if m else None
 
 
 def type_sql(t: str, dialect: str) -> str:
@@ -547,14 +547,12 @@ def _split_type_args(s: str) -> tuple[str, str]:
 @dataclass
 class GenContext:
     dialect: str = SPARK
-    # table name -> list of column names (best-effort; None ok)
-    table_columns: object = None        # Callable[[str], list[str] | None]
+    # table name -> {column: Spark type simpleString} (best-effort; None ok)
+    table_schema: object = None         # Callable[[str], dict | None]
     # pivot value prober: Callable[[sql_text], list of values] | None
     prober: object = None
     # table name -> SQL-addressable name (view registration etc.)
     table_name_map: object = None       # Callable[[str], str]
-    # bare column name -> Spark type simpleString (best-effort; None ok)
-    column_type: object = None          # Callable[[str], str | None]
 
 
 class SqlGenerator:
@@ -562,6 +560,10 @@ class SqlGenerator:
         self.ctx = ctx
         self.dialect = ctx.dialect
         self._alias_n = 0
+        # types of the block expressions render against (set by gen_rel)
+        self._types: dict[str, str] = {}
+        # CTE name -> (columns, types) of its body; shadows catalog tables
+        self._ctes: dict[str, tuple] = {}
 
     # ------------------------------------------------------------------ util
 
@@ -569,23 +571,25 @@ class SqlGenerator:
         self._alias_n += 1
         return f"__{prefix}{self._alias_n}"
 
-    def _decimal_scale(self, e) -> int | None:
-        """Scale of a plain column reference with a decimal type, else None
-        (composite expressions keep Spark's own derived type — their
-        precision already saturates at 38 under Spark's multiply rules)."""
-        if self.ctx.column_type is None or e is None:
-            return None
-        if isinstance(e, N.Ident):
-            name = e.name
-        elif isinstance(e, N.Ref):
-            name = e.name
-        else:
-            return None
-        t = self.ctx.column_type(name)
-        if t is None:
-            return None
-        m = re.match(r"decimal\((\d+),(\d+)\)", t)
-        return int(m.group(2)) if m else None
+    def _type_of(self, e) -> str | None:
+        """Spark type of a bare column reference (a qualified `t.col` by
+        its last part) in the current block; None for a name the block
+        does not type and for any other expression."""
+        if self._types and isinstance(e, (N.Ident, N.Ref)):
+            return self._types.get(e.name.split(".")[-1])
+        return None
+
+    def _typed(self, items: list, types: dict | None = None) -> dict:
+        """`types` without the columns `items` alias, plus the types of
+        the columns `items` define: a bare column reference keeps its
+        type, another expression has none."""
+        aliases = {it.alias for it in items}
+        out = {c: t for c, t in (types or {}).items() if c not in aliases}
+        for it in items:
+            t = self._type_of(it.expr)
+            if t is not None:
+                out[self._item_name(it)] = t
+        return out
 
     def q(self, name: str) -> str:
         if _SAFE_IDENT.match(name) and name.lower() not in _RESERVED:
@@ -621,6 +625,8 @@ class SqlGenerator:
         limit: int | None = None
         offset: int | None = None
         columns: list[str] | None = None   # best-effort output column names
+        # output column -> Spark type simpleString, where known
+        types: dict = field(default_factory=dict)
         # per-source-alias column lists for relations the lowering
         # flattened (asof join): lets a later `select l.*` expand to
         # explicit columns even though alias `l` no longer exists in SQL
@@ -669,7 +675,7 @@ class SqlGenerator:
         # hidden helper columns do not survive a wrap (render emits the
         # visible columns explicitly) — the new block is clean
         return SqlGenerator.Block(source=f"({sql}) AS {self.q(self.fresh())}",
-                                  columns=cols, qcols=qcols)
+                                  columns=cols, qcols=qcols, types=b.types)
 
     def _needs_wrap_for_filter(self, b: Block) -> bool:
         return b.select is not None or b.limit is not None or b.offset is not None or bool(b.order)
@@ -702,10 +708,32 @@ class SqlGenerator:
                     for c in agg_cols]
         b.select = key_sqls + agg_sqls
         b.columns = key_names + [f"arbitrary({c})" for c in agg_cols]
+        b.types = self._typed(keys)
 
     # ---------------------------------------------------------- relations
 
     def gen_rel(self, rel: N.Relation) -> "SqlGenerator.Block":
+        """The block of `rel`; its column types become the scope the
+        caller's expressions render against."""
+        b = self._gen_rel(rel)
+        self._types = b.types
+        return b
+
+    def _subquery(self, rel: N.Relation) -> str:
+        """SQL of a relation nested in an expression, keeping the
+        enclosing block's column types in scope."""
+        types = self._types
+        sql = self.render(self.gen_rel(rel))
+        self._types = types
+        return sql
+
+    def _catalog_block(self, source: str, name: str) -> "SqlGenerator.Block":
+        schema = self.ctx.table_schema(name) if self.ctx.table_schema else None
+        return SqlGenerator.Block(
+            source=source, columns=None if schema is None else list(schema),
+            types=schema or {})
+
+    def _gen_rel(self, rel: N.Relation) -> "SqlGenerator.Block":
         from wvlet_spark.parser import _HoleRelation, _NoInput
 
         B = SqlGenerator.Block
@@ -716,14 +744,13 @@ class SqlGenerator:
         if isinstance(rel, N.TableRef):
             name = rel.name
             # CTE names shadow catalog tables within the WITH scope
-            cte_cols = getattr(self, "_cte_columns", {}).get(name)
-            if cte_cols is not None:
-                return B(source=self.q(name), columns=list(cte_cols))
+            if name in self._ctes:
+                cols, types = self._ctes[name]
+                return B(source=self.q(name), columns=cols, types=types)
             if self.ctx.table_name_map:
                 name = self.ctx.table_name_map(name)
-            cols = self.ctx.table_columns(rel.name) if self.ctx.table_columns else None
             qname = ".".join(self.q(p) for p in name.split("."))
-            return B(source=qname, columns=cols)
+            return self._catalog_block(qname, rel.name)
         if isinstance(rel, N.FileScan):
             return self._gen_filescan(rel)
         if isinstance(rel, N.RawSQL):
@@ -744,7 +771,11 @@ class SqlGenerator:
             if rel.columns:
                 alias += "(" + ", ".join(self.q(c) for c in rel.columns) + ")"
             cols = rel.columns or child.columns
-            return B(source=f"({inner}) AS {alias}", columns=cols)
+            types = child.types if not rel.columns else {
+                new: child.types[old]
+                for new, old in zip(rel.columns, child.columns or ())
+                if old in child.types}
+            return B(source=f"({inner}) AS {alias}", columns=cols, types=types)
         if isinstance(rel, N.ParenRelation):
             child = self.gen_rel(rel.child)
             return self.wrap(child) if _block_dirty(child) else child
@@ -768,23 +799,17 @@ class SqlGenerator:
             return self._gen_projection(rel)
         if isinstance(rel, N.Transform):
             return self._gen_transform(rel)
-        if isinstance(rel, N.AddColumns):
+        if isinstance(rel, (N.AddColumns, N.PrependColumns)):
             b = self.gen_rel(rel.child)
             if _block_dirty(b):
                 b = self.wrap(b)
             items = [self._select_item(i) for i in rel.items]
-            b.select = ["*"] + items
+            first = isinstance(rel, N.PrependColumns)
+            b.select = items + ["*"] if first else ["*"] + items
             if b.columns is not None:
-                b.columns = b.columns + [self._item_name(i) for i in rel.items]
-            return b
-        if isinstance(rel, N.PrependColumns):
-            b = self.gen_rel(rel.child)
-            if _block_dirty(b):
-                b = self.wrap(b)
-            items = [self._select_item(i) for i in rel.items]
-            b.select = items + ["*"]
-            if b.columns is not None:
-                b.columns = [self._item_name(i) for i in rel.items] + b.columns
+                names = [self._item_name(i) for i in rel.items]
+                b.columns = names + b.columns if first else b.columns + names
+            b.types = self._typed(rel.items, b.types)
             return b
         if isinstance(rel, N.ExcludeColumns):
             b = self.gen_rel(rel.child)
@@ -796,6 +821,7 @@ class SqlGenerator:
                 b.select = ["* EXCLUDE (" + ", ".join(self.q(c) for c in rel.names) + ")"]
             if b.columns is not None:
                 b.columns = [c for c in b.columns if c not in set(rel.names)]
+            b.types = {c: t for c, t in b.types.items() if c not in rel.names}
             return b
         if isinstance(rel, N.RenameColumns):
             return self._gen_rename(rel)
@@ -850,6 +876,7 @@ class SqlGenerator:
             b = self.wrap(b)
             b.select = ["COUNT(*) AS count"]
             b.columns = ["count"]
+            b.types = {}
             return b
         if isinstance(rel, N.Pivot):
             return self._gen_pivot(rel)
@@ -870,17 +897,15 @@ class SqlGenerator:
     # ----- leaf sources
 
     def _gen_filescan(self, rel: N.FileScan) -> "SqlGenerator.Block":
-        B = SqlGenerator.Block
-        cols = self.ctx.table_columns(rel.path) if self.ctx.table_columns else None
         if self.dialect == SPARK:
             # Spark SQL direct file query: parquet.`path` / csv.`...`
             if self.ctx.table_name_map:
                 mapped = self.ctx.table_name_map(rel.path)
                 if mapped != rel.path:
-                    return B(source=mapped, columns=cols)
-            return B(source=f"{rel.fmt}.`{rel.path}`", columns=cols)
+                    return self._catalog_block(mapped, rel.path)
+            return self._catalog_block(f"{rel.fmt}.`{rel.path}`", rel.path)
         fn = {"parquet": "read_parquet", "csv": "read_csv_auto", "json": "read_json_auto"}[rel.fmt]
-        return B(source=f"{fn}({self.str_lit(rel.path)})", columns=cols)
+        return self._catalog_block(f"{fn}({self.str_lit(rel.path)})", rel.path)
 
     def _gen_values(self, rel: N.Values) -> "SqlGenerator.Block":
         B = SqlGenerator.Block
@@ -994,6 +1019,9 @@ class SqlGenerator:
                 names.append(self._item_name(it))
             b.select = sel_items
             b.columns = names
+            # an output column keeps a type only as a bare-column key
+            b.types = {c: t for c, t in self._typed(b.group_keys).items()
+                       if c in names}
             if getattr(rel, "distinct", False):
                 b = self.wrap(b)
                 b.distinct = True
@@ -1004,12 +1032,15 @@ class SqlGenerator:
             b.group_keys = []
             b.select = [self._select_item(it) for it in items]
             b.columns = [self._item_name(it) for it in items]
+            b.types = {}
             return b
 
         sel: list[str] = []
         names: list[str] = []
+        types: dict = {}   # output column -> type (None: untyped)
         for it in items:
             if isinstance(it, N.Star):
+                types.update(b.types)   # a star passes its input's types
                 if it.qualifier and b.qcols \
                         and b.qcols.get(it.qualifier) is not None:
                     # the qualifier names a relation the lowering
@@ -1032,15 +1063,18 @@ class SqlGenerator:
             if cm is not None:
                 sel.extend(self.q(c) for c in cm)
                 names.extend(cm)
+                types.update((c, b.types.get(c)) for c in cm)
                 continue
             sel.append(self._select_item(it))
             names.append(self._item_name(it))
+            types[names[-1]] = self._type_of(it.expr)
         # a plain select containing aggregate functions = implicit global agg
         if any(self._contains_agg(it.expr) for it in items if isinstance(it, N.NamedExpr)):
             b.group_keys = []
         b.select = sel
         b.distinct = getattr(rel, "distinct", False)
         b.columns = names
+        b.types = {c: t for c, t in types.items() if t is not None}
         return b
 
     _GROUP_MODIFIERS = ("cube", "rollup", "grouping_sets")
@@ -1213,12 +1247,7 @@ class SqlGenerator:
         """Reference-style auto-name: the DuckDB rendering of the expression."""
         if self.dialect == DUCKDB:
             return self.expr(e)
-        g = SqlGenerator(GenContext(
-            dialect=DUCKDB,
-            table_columns=self.ctx.table_columns,
-            prober=self.ctx.prober,
-            table_name_map=self.ctx.table_name_map,
-        ))
+        g = SqlGenerator(replace(self.ctx, dialect=DUCKDB))
         try:
             return g.expr(e)
         except Exception:
@@ -1265,6 +1294,7 @@ class SqlGenerator:
             b.select = [f"* {except_kw} ({names})"] + [
                 f"{sql} AS {self.q(c)}" for c, sql in updates.items()
             ]
+        b.types = self._typed([it for it in rel.items if it.alias], b.types)
         return b
 
     def _gen_rename(self, rel: N.RenameColumns) -> "SqlGenerator.Block":
@@ -1292,6 +1322,7 @@ class SqlGenerator:
             b.select = [f"* EXCEPT ({olds})"] + [
                 f"{self.q(a)} AS {self.q(c)}" for a, c in rel.renames
             ]
+        b.types = {ren.get(c, c): t for c, t in b.types.items()}
         return b
 
     # ----- joins
@@ -1328,7 +1359,7 @@ class SqlGenerator:
             "inner": "JOIN", "left": "LEFT JOIN", "right": "RIGHT JOIN",
             "full": "FULL JOIN", "cross": "CROSS JOIN",
         }[rel.join_type]
-        cols: list[str] | None
+        self._types = types = _join_types(lb, rb)
         if rel.natural:
             # NATURAL JOIN renders natively on both targets; output =
             # shared columns once, then each side's own columns
@@ -1342,18 +1373,13 @@ class SqlGenerator:
                         + [c for c in rb.columns if c not in shared])
             else:
                 cols = None
-            out = B(source=src, columns=cols)
-            out.where.extend(lb.where)
-            return out
-        if rel.using:
+        elif rel.using:
             using = ", ".join(self.q(c) for c in rel.using)
             src = f"{lb.source} {jt} {rsrc} USING ({using})"
-            lcols = lb.columns or []
-            rcols = rb.columns or []
             cols = (
                 rel.using
-                + [c for c in lcols if c not in rel.using]
-                + [c for c in rcols if c not in rel.using]
+                + [c for c in lb.columns if c not in rel.using]
+                + [c for c in rb.columns if c not in rel.using]
             ) if (lb.columns is not None and rb.columns is not None) else None
         elif rel.cond is not None:
             src = f"{lb.source} {jt} {rsrc} ON {self.expr(rel.cond)}"
@@ -1361,7 +1387,7 @@ class SqlGenerator:
         else:
             src = f"{lb.source} CROSS JOIN {rsrc}"
             cols = (lb.columns + rb.columns) if (lb.columns is not None and rb.columns is not None) else None
-        out = B(source=src, columns=cols)
+        out = B(source=src, columns=cols, types=types)
         out.where.extend(lb.where)
         return out
 
@@ -1381,9 +1407,10 @@ class SqlGenerator:
         left_alias = _relation_alias(rel.left) or "l"
         right_alias = _relation_alias(rel.right) or "r"
         lb = self.gen_rel(rel.left)
-        rb = self.gen_rel(rel.right)
         lsql = self.render(lb)
+        rb = self.gen_rel(rel.right)
         rsql = self.render(rb)
+        self._types = types = _join_types(lb, rb)
 
         # columns duplicated on both sides resolve to the LEFT side for
         # unqualified refs and star output (matches the reference's
@@ -1394,6 +1421,7 @@ class SqlGenerator:
         # Catalyst prunes the unreferenced copies, so the extra width is
         # plan-only.
         hidden = False
+        qcols = None
         if lb.columns is not None and rb.columns is not None:
             lset = set(lb.columns)
             right_only = [c for c in rb.columns if c not in lset]
@@ -1404,6 +1432,9 @@ class SqlGenerator:
             rproj = ", ".join(parts)
             cols = lb.columns + right_only
             hidden = bool(dup)
+            # alias -> columns of the flattened output: `r.*` expands to
+            # the right-only columns, which are the ones that survive
+            qcols = {left_alias: list(lb.columns), right_alias: right_only}
         else:
             rproj = f"{self.q(right_alias)}.*"
             cols = None
@@ -1415,8 +1446,8 @@ class SqlGenerator:
                 f"FROM ({lsql}) AS {self.q(left_alias)} ASOF {jt} ({rsql}) AS {self.q(right_alias)} "
                 f"ON {self.expr(rel.cond)}) AS {self.q(self.fresh('asof'))}"
             )
-            return B(source=src, columns=cols, hidden=hidden,
-                     qcols=self._asof_qcols(left_alias, right_alias, lb, rb))
+            return B(source=src, columns=cols, hidden=hidden, types=types,
+                     qcols=qcols)
 
         lid = "__wv_asof_lid"
         rn = "__wv_asof_rn"
@@ -1434,18 +1465,7 @@ class SqlGenerator:
             f"WHERE {rn} = 1"
         )
         return B(source=f"({outer}) AS {self.q(self.fresh('asofo'))}", columns=cols,
-                 hidden=hidden,
-                 qcols=self._asof_qcols(left_alias, right_alias, lb, rb))
-
-    @staticmethod
-    def _asof_qcols(left_alias, right_alias, lb, rb) -> dict | None:
-        """Alias -> column-name map for the flattened asof output
-        (duplicated columns resolve to the left side, so `r.*` expands
-        to the right-only columns that actually survive)."""
-        if lb.columns is None or rb.columns is None:
-            return None
-        right_only = [c for c in rb.columns if c not in set(lb.columns)]
-        return {left_alias: list(lb.columns), right_alias: right_only}
+                 hidden=hidden, types=types, qcols=qcols)
 
     def _asof_order(self, cond: N.Expr, right_alias: str) -> tuple[str, bool]:
         """Find the inequality conjunct; return (right-side order expr SQL,
@@ -1562,6 +1582,7 @@ class SqlGenerator:
             names.append(name)
         b.select = sel
         b.columns = names
+        b.types = self._typed(items0)
         b.group_keys = [N.NamedExpr(expr=it.expr, alias=None) for it in items0]
         b.having = [f"max(CASE WHEN ({p}) THEN 1 ELSE 0 END) = 1"
                     for p in pred_sqls]
@@ -1576,7 +1597,8 @@ class SqlGenerator:
                 return fused
         lb = self.gen_rel(rel.left)
         l = self.render(lb)
-        r = self.render(self.gen_rel(rel.right))
+        rb = self.gen_rel(rel.right)
+        r = self.render(rb)
         kw = {
             "union_all": "UNION ALL",
             "union": "UNION",
@@ -1588,8 +1610,11 @@ class SqlGenerator:
         # parenthesize operands so branch-local ORDER BY / LIMIT binds to
         # its own branch, not the whole union (round-5 probe find: an
         # unparenthesized branch LIMIT was a Spark parse error)
+        # a column keeps a type both branches give it
+        types = {c: lb.types[c] for c, rc in zip(lb.columns or (), rb.columns or ())
+                 if c in lb.types and rb.types.get(rc) == lb.types[c]}
         return B(source=f"(({l}) {kw} ({r})) AS {self.q(self.fresh('set'))}",
-                 columns=lb.columns)
+                 columns=lb.columns, types=types)
 
     # ----- sampling
 
@@ -1674,6 +1699,7 @@ class SqlGenerator:
         b.group_keys = list(group_by)
         b.select = sel
         b.columns = names
+        b.types = self._typed(group_by)
         return b
 
     def _conditional_agg(self, e: N.Expr, cond_sql: str) -> str:
@@ -1700,18 +1726,17 @@ class SqlGenerator:
             f"FOR {self.q(rel.name_col)} IN ({in_cols})))"
         )
         cols = ids + [rel.name_col, rel.value_col]
-        return B(source=f"{src} AS {self.q(self.fresh('unpv'))}", columns=cols)
+        return B(source=f"{src} AS {self.q(self.fresh('unpv'))}", columns=cols,
+                 types={c: t for c, t in b.types.items() if c in ids})
 
     # ----- with / describe
 
     def _gen_with(self, rel: N.WithQuery) -> "SqlGenerator.Block":
         B = SqlGenerator.Block
         defs = []
-        # record each CTE's output columns so body references (esp. the
-        # asof-join projection, which must know both sides' columns to
-        # avoid duplicating shared names) can resolve them
-        if not hasattr(self, "_cte_columns"):
-            self._cte_columns = {}
+        # record each CTE's output columns and types so body references
+        # (esp. the asof-join projection, which must know both sides'
+        # columns to avoid duplicating shared names) can resolve them
         for name, q in rel.defs:
             # `with recursive t(n) as {...}` — the parser wraps the body
             # in an AliasedRelation carrying the column list; unwrap it
@@ -1732,18 +1757,17 @@ class SqlGenerator:
                 l = self.render(self.gen_rel(q.left))
                 r = self.render(self.gen_rel(q.right))
                 kw = "UNION ALL" if q.op == "union_all" else "UNION"
-                if cte_cols:
-                    self._cte_columns[name] = cte_cols
+                self._ctes[name] = (cte_cols, {})
                 defs.append(f"{head} AS (({l}) {kw} ({r}))")
             else:
                 qb = self.gen_rel(q)
-                if qb.columns is not None:
-                    self._cte_columns[name] = list(qb.columns)
+                self._ctes[name] = (qb.columns, qb.types)
                 defs.append(f"{self.q(name)} AS ({self.render(qb)})")
-        body = self.render(self.gen_rel(rel.body))
+        bb = self.gen_rel(rel.body)
         kw = "WITH RECURSIVE " if rel.recursive else "WITH "
-        sql = kw + ", ".join(defs) + " " + body
-        return B(source=f"({sql}) AS {self.q(self.fresh('cte'))}")
+        sql = kw + ", ".join(defs) + " " + self.render(bb)
+        return B(source=f"({sql}) AS {self.q(self.fresh('cte'))}",
+                 types=bb.types)
 
     def _gen_describe(self, rel: N.Describe) -> "SqlGenerator.Block":
         B = SqlGenerator.Block
@@ -1799,10 +1823,10 @@ class SqlGenerator:
             return f"({self.expr(e.expr)} {kw} ({vals}))"
         if isinstance(e, N.InSubquery):
             kw = "NOT IN" if e.negated else "IN"
-            sub = self.render(self.gen_rel(e.query))
+            sub = self._subquery(e.query)
             return f"({self.expr(e.expr)} {kw} ({sub}))"
         if isinstance(e, N.Exists):
-            sub = self.render(self.gen_rel(e.query))
+            sub = self._subquery(e.query)
             kw = "NOT EXISTS" if e.negated else "EXISTS"
             return f"({kw} ({sub}))"
         if isinstance(e, N.Like):
@@ -1832,7 +1856,7 @@ class SqlGenerator:
             low_t = e.to_type.strip().lower()
             if self.dialect != SPARK \
                     and low_t.startswith(("decimal", "numeric")) \
-                    and _maybe_fractional_numeric(e.expr, self.ctx.column_type):
+                    and _maybe_fractional_numeric(e.expr, self._type_of):
                 # decimal scale reduction rounds HALF_UP (away from zero)
                 # in Spark but TRUNCATES in DuckDB (99.999::decimal(10,1)
                 # = 100.0 vs 99.9) — pre-round at the target scale
@@ -1842,7 +1866,7 @@ class SqlGenerator:
                 return (f"{fn}(round({self.expr(e.expr)}, {scale}) "
                         f"AS {type_sql(e.to_type, self.dialect)})")
             if self.dialect != SPARK and low_t in _INT_CAST_TARGETS \
-                    and _maybe_fractional_numeric(e.expr, self.ctx.column_type):
+                    and _maybe_fractional_numeric(e.expr, self._type_of):
                 # double->int CAST semantics differ: Spark truncates
                 # toward zero, DuckDB rounds half away from zero
                 # (CAST(-3.5 AS BIGINT) = -3 vs -4).  The engine defines
@@ -1904,7 +1928,7 @@ class SqlGenerator:
             head = params if len(e.params) == 1 else f"({params})"
             return f"{head} -> {self.expr(e.body)}"
         if isinstance(e, N.ScalarSubquery):
-            return f"({self.render(self.gen_rel(e.query))})"
+            return f"({self._subquery(e.query)})"
         if isinstance(e, N.InterpString):
             parts = []
             for p in e.parts:
@@ -2131,11 +2155,7 @@ class SqlGenerator:
             return False
         if isinstance(e, N.MethodCall):
             return e.method.lower() in ("array_agg", "collect_list")
-        if isinstance(e, (N.Ident, N.Ref)) \
-                and self.ctx.column_type is not None:
-            t = self.ctx.column_type(e.name.split(".")[-1])
-            return bool(t) and t.strip().lower().startswith(("array", "list"))
-        return False
+        return (self._type_of(e) or "").startswith("array")
 
     def _function(self, e: N.FunctionApply) -> str:
         name = e.name if e.raw else self._map_fn(e.name)
@@ -2742,7 +2762,10 @@ class SqlGenerator:
             # (reference spec/tpch/test/q1-test.wv golden types).
             if self.dialect == SPARK and m in ("sum", "avg"):
                 arg = (e.args[0] if e.args else None) if is_group else t
-                scale = self._decimal_scale(arg)
+                # of a plain column reference: composite expressions keep
+                # Spark's own derived type (their precision already
+                # saturates at 38 under Spark's multiply rules)
+                scale = _decimal_scale(self._type_of(arg))
                 if scale is not None:
                     if m == "sum":
                         core = f"CAST({core} AS DECIMAL(38,{scale}))"
@@ -2788,7 +2811,7 @@ class SqlGenerator:
             # reference spec/tpch/q16.wv) lowers to [NOT] IN (SELECT ...)
             kw = "NOT IN" if m == "not_in" else "IN"
             if len(e.args) == 1 and isinstance(e.args[0], N.ScalarSubquery):
-                sub = self.render(self.gen_rel(e.args[0].query))
+                sub = self._subquery(e.args[0].query)
                 core = f"({self.expr(t)} {kw} ({sub}))"
             else:
                 vals = ", ".join(self.expr(a) for a in e.args)
@@ -2979,6 +3002,18 @@ def _collect_expr_idents(e, out: set) -> None:
     if isinstance(e, (list, tuple)):
         for x in e:
             _collect_expr_idents(x, out)
+
+
+def _join_types(lb: "SqlGenerator.Block", rb: "SqlGenerator.Block") -> dict:
+    """Column types after joining two blocks: a name typed on one side
+    keeps its type unless the other side may hold it with another."""
+    out = {}
+    for a, b in ((lb, rb), (rb, lb)):
+        for c, t in a.types.items():
+            if b.columns is not None and (c not in b.columns
+                                          or b.types.get(c) == t):
+                out[c] = t
+    return out
 
 
 def _block_dirty(b: "SqlGenerator.Block") -> bool:

@@ -599,7 +599,7 @@ def _try_reorder(node: N.Relation, schema_of, stats_of,
 
 def reorder_joins(rel, schema_of, stats_of, broadcast_bytes=None):
     """Recursively apply greedy join reordering across a statement tree
-    (including subquery relations).  schema_of(name)->cols|None,
+    (including subquery relations).  schema_of(name)->{col: type}|None,
     stats_of(name)->TableStats|None.  broadcast_bytes: the session's
     autoBroadcastJoinThreshold (None -> Spark's 10 MB default; <=0
     disables broadcast awareness, costing every step as a shuffle)."""

@@ -13,8 +13,7 @@ from pyspark.sql import DataFrame
 # and the guard is a no-op, so this knob only shapes small-input runs.
 _MAP_TASK_MB = 1
 
-# (application id, semantic plan hash) -> (scan partition count,
-# footer-estimated plan bytes).  The probe
+# (application id, semantic plan hash) -> scan partition count.  The probe
 # that fills this (plan -> RDD conversion) costs a driver round-trip +
 # physical planning, so it runs at most once per distinct plan per
 # application; repeated ext-op invocations hit the cache via semanticHash
@@ -24,14 +23,26 @@ _MAP_TASK_MB = 1
 # can go stale if files under the same plan change mid-application (e.g. a
 # save to the same path) — the only consequence is a possibly-suboptimal
 # repartition decision, never a wrong result.
-_NPARTS_CACHE: "OrderedDict[tuple[str, int], int]" = OrderedDict()
-_NPARTS_CACHE_MAX = 256
+_NPARTS_CACHE: OrderedDict = OrderedDict()
+_CACHE_MAX = 256
+
+
+def _cached(cache: OrderedDict, key, compute):
+    """cache[key], filled by `compute()` on a miss (an exception caches
+    nothing); past _CACHE_MAX entries the least recently used goes."""
+    if key in cache:
+        cache.move_to_end(key)
+        return cache[key]
+    value = cache[key] = compute()
+    while len(cache) > _CACHE_MAX:
+        cache.popitem(last=False)
+    return value
 
 
 # (application id, semantic plan hash, column) -> embedding dimension.
 # Same rationale as _NPARTS_CACHE: the one-row probe is a real (tiny) job,
 # so run it at most once per distinct plan per application.
-_DIM_CACHE: "OrderedDict[tuple[str, int, str], int]" = OrderedDict()
+_DIM_CACHE: OrderedDict = OrderedDict()
 
 
 def probe_vector_dim(df: DataFrame, vec_col: str) -> int:
@@ -53,15 +64,7 @@ def probe_vector_dim(df: DataFrame, vec_col: str) -> int:
         key = (sc.applicationId, df.semanticHash(), vec_col)
     except Exception:
         return probe()
-    dim = _DIM_CACHE.get(key)
-    if dim is None:
-        dim = probe()
-        _DIM_CACHE[key] = dim
-        while len(_DIM_CACHE) > _NPARTS_CACHE_MAX:
-            _DIM_CACHE.popitem(last=False)
-    else:
-        _DIM_CACHE.move_to_end(key)
-    return dim
+    return _cached(_DIM_CACHE, key, probe)
 
 
 # inputs under this footer-estimated size skip eager intermediate
@@ -74,7 +77,7 @@ def probe_vector_dim(df: DataFrame, vec_col: str) -> int:
 # lazy vs 12 s materialized, SCALE.md §29) so checkpoints stay ON.
 _MATERIALIZE_MIN_MB = 32
 
-_PLAN_BYTES_CACHE: "OrderedDict[tuple[str, int], int | None]" = OrderedDict()
+_PLAN_BYTES_CACHE: OrderedDict = OrderedDict()
 
 
 def plan_estimated_bytes(df: DataFrame) -> int | None:
@@ -85,18 +88,15 @@ def plan_estimated_bytes(df: DataFrame) -> int | None:
         key = (sc.applicationId, df.semanticHash())
     except Exception:
         return None
-    if key in _PLAN_BYTES_CACHE:
-        _PLAN_BYTES_CACHE.move_to_end(key)
-        return _PLAN_BYTES_CACHE[key]
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
-    except Exception:
-        est = None
-    _PLAN_BYTES_CACHE[key] = est
-    while len(_PLAN_BYTES_CACHE) > _NPARTS_CACHE_MAX:
-        _PLAN_BYTES_CACHE.popitem(last=False)
-    return est
+
+    def estimate() -> int | None:
+        try:
+            return int(df._jdf.queryExecution().optimizedPlan()
+                       .stats().sizeInBytes())
+        except Exception:
+            return None
+
+    return _cached(_PLAN_BYTES_CACHE, key, estimate)
 
 
 def materialize_if_big(df: DataFrame, input_df: DataFrame) -> DataFrame:
@@ -227,22 +227,11 @@ def ensure_map_parallelism(df: DataFrame, min_fraction: float = 2.0,
     cap = sc.defaultParallelism
     try:
         key = (sc.applicationId, df.semanticHash())
-        cached = _NPARTS_CACHE.get(key)
-        if cached is None:
-            nparts = df.rdd.getNumPartitions()
-            try:
-                est_bytes = int(df._jdf.queryExecution().optimizedPlan()
-                                .stats().sizeInBytes())
-            except Exception:
-                est_bytes = None
-            _NPARTS_CACHE[key] = (nparts, est_bytes)
-            while len(_NPARTS_CACHE) > _NPARTS_CACHE_MAX:
-                _NPARTS_CACHE.popitem(last=False)
-        else:
-            _NPARTS_CACHE.move_to_end(key)
-            nparts, est_bytes = cached
+        nparts = _cached(_NPARTS_CACHE, key,
+                         lambda: df.rdd.getNumPartitions())
     except Exception:
         return df
+    est_bytes = plan_estimated_bytes(df)
     target = cap
     if not wide and est_bytes is not None and est_bytes >= 0:
         per_task = _MAP_TASK_MB * 1024 * 1024

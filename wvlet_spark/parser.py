@@ -888,12 +888,16 @@ class Parser:
     def parse_query(self) -> tuple[N.Relation, list[N.Expr]]:
         """Parse a query (with/from/select/show ...) and trailing tests."""
         rel = self.parse_query_body()
+        # tests may trail at statement level (already handled in pipe ops
+        # too); a `with … from …` query holds them at the end of its body
+        body = rel.body if isinstance(rel, N.WithQuery) else rel
         tests: list[N.Expr] = []
-        # tests may trail at statement level (already handled in pipe ops too)
-        while isinstance(rel, N.TestRelation):
-            tests.insert(0, rel.expr)
-            rel = rel.child
-        return rel, tests
+        while isinstance(body, N.TestRelation):
+            tests.insert(0, body.expr)
+            body = body.child
+        if isinstance(rel, N.WithQuery):
+            return N.WithQuery(rel.defs, body, rel.recursive), tests
+        return body, tests
 
     def parse_query_body(self) -> N.Relation:
         ctes: list[tuple[str, N.Relation]] = []

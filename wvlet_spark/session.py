@@ -68,7 +68,7 @@ class RunScope:
         view = f"__wv_{kind}_{next(_VIEW_IDS)}"
         df.createOrReplaceTempView(view)
         self.views.append(view)
-        self.session._schema_cache[view] = df.columns
+        self.session._schema_cache[view] = _schema(df)
         return view
 
     def check(self, df, tests) -> None:
@@ -96,8 +96,7 @@ class RunScope:
         for view in views:
             ws.spark.catalog.dropTempView(view)
             ws._tstats_cache.pop(view, None)
-            for col in ws._schema_cache.pop(view, None) or ():
-                ws._coltype_cache.pop(col, None)
+            ws._schema_cache.pop(view, None)
         self.views = [v for v in self.views if v not in views]
 
     def __enter__(self) -> RunScope:
@@ -132,15 +131,16 @@ class WvletSession:
         self.spark = spark
         self.analyzer = Analyzer()
         # catalog lookup for the asof-join duplicate-column analysis
-        self.analyzer.table_columns = self.table_columns
+        self.analyzer.table_schema = self.table_schema
         # stdlib natives (reference ships ulid_string in its standard
         # library; calls are compile-time evaluated)
         self.analyzer.register(N.FunctionDef(
             "ulid_string", [], "string", N.NativeExpr("ulid_string", "string")))
         self.file_base = file_base
         self.test_mode = test_mode   # the default of each run's scope
-        self._schema_cache: dict[str, list[str]] = {}
-        self._coltype_cache: dict[str, str] = {}
+        # relation -> {column: Spark type simpleString}, from the schema
+        # of the frame it was registered or staged from
+        self._schema_cache: dict[str, dict[str, str]] = {}
         # footer-stats cache for the join-order pass: resolving a table to
         # its files costs a JVM roundtrip per lookup, so hits are kept for
         # the session and invalidated whenever a statement writes a table
@@ -175,19 +175,17 @@ class WvletSession:
                 path = os.path.join(table_dir, fn)
                 df = read_parquet_robust(self.spark, path)
                 df.createOrReplaceTempView(name)
-                self._schema_cache[name] = df.columns
+                self._schema_cache[name] = _schema(df)
 
-    def table_columns(self, name: str) -> list[str] | None:
-        if name in self._schema_cache:
-            return self._schema_cache[name]
-        if self.spark is None:
-            return None
-        try:
-            cols = self.spark.table(name).columns
-            self._schema_cache[name] = cols
-            return cols
-        except Exception:
-            return None
+    def table_schema(self, name: str) -> dict[str, str] | None:
+        """{column: Spark type simpleString} of a table or view, None when
+        it is unknown."""
+        if name not in self._schema_cache and self.spark is not None:
+            try:
+                self._schema_cache[name] = _schema(self.spark.table(name))
+            except Exception:
+                return None
+        return self._schema_cache.get(name)
 
     # ------------------------------------------------------------- compile
 
@@ -220,48 +218,10 @@ class WvletSession:
 
         return GenContext(
             dialect=dialect,
-            table_columns=self.table_columns,
+            table_schema=self.table_schema,
             prober=prober,
             table_name_map=name_map,
-            column_type=self.column_type,
         )
-
-    # sentinel cached for a column name that appears in multiple registered
-    # tables with DIFFERING types — the lookup is then ambiguous and callers
-    # (the decimal-aggregate rewrite) must not apply a type-directed rewrite
-    _AMBIGUOUS_TYPE = "<ambiguous>"
-
-    def column_type(self, col: str) -> str | None:
-        """Spark type simpleString of a bare column name, looked up across
-        the registered table views (schema comes from the already-read
-        parquet footers — no job runs).  If the name resolves in several
-        tables with conflicting types the answer is None (ambiguous):
-        a first-match-wins guess could cast an aggregate at the wrong
-        decimal scale.  Same-typed duplicates are fine."""
-        if self.spark is None:
-            return None
-        cached = self._coltype_cache.get(col)
-        if cached is not None:
-            return None if cached == self._AMBIGUOUS_TYPE else cached
-        found: str | None = None
-        for table in list(self._schema_cache):
-            cols = self._schema_cache.get(table) or []
-            if col in cols:
-                try:
-                    schema = self.spark.table(table).schema
-                except Exception:
-                    continue
-                for f in schema.fields:
-                    if f.name == col:
-                        t = f.dataType.simpleString()
-                        if found is None:
-                            found = t
-                        elif found != t:
-                            self._coltype_cache[col] = self._AMBIGUOUS_TYPE
-                            return None
-        if found is not None:
-            self._coltype_cache[col] = found
-        return found
 
     def parse(self, text: str) -> list[N.Statement]:
         return Parser(text).parse_statements()
@@ -334,7 +294,7 @@ class WvletSession:
         conjunct and only permutes inner/cross chain operands."""
         from wvlet_spark.joinorder import reorder_joins
 
-        return reorder_joins(plan, self.table_columns, self._table_stats,
+        return reorder_joins(plan, self.table_schema, self._table_stats,
                              broadcast_bytes=self._broadcast_threshold())
 
     def _broadcast_threshold(self):
@@ -698,7 +658,7 @@ class WvletSession:
         df.createOrReplaceTempView(view)
         self._file_views[key] = view
         self._file_views[node.path] = view
-        self._schema_cache[view] = df.columns
+        self._schema_cache[view] = _schema(df)
         return view
 
     def _stage_show(self, node: N.Show) -> str:
@@ -852,7 +812,7 @@ class WvletSession:
                 w = self._apply_write_options(
                     df.write.mode("overwrite"), stmt.options)
                 w.saveAsTable(stmt.target)
-                self._schema_cache[stmt.target] = df.columns
+                self._schema_cache[stmt.target] = _schema(df)
             return None
         if isinstance(stmt, N.AppendTo):
             df = self.sql_df(stmt.child)
@@ -1311,7 +1271,7 @@ class WvletSession:
         if exists and stmt.overwrite:
             self.spark.sql(f"DROP TABLE IF EXISTS {stmt.target}")
         df.write.mode(mode).saveAsTable(stmt.target)
-        self._schema_cache[stmt.target] = df.columns
+        self._schema_cache[stmt.target] = _schema(df)
         return None
 
     def _run_delete(self, stmt: N.DeleteStmt):
@@ -1325,6 +1285,7 @@ class WvletSession:
             raise CompileError("delete requires a filtered table pipeline")
         table = node.name
         gen = SqlGenerator(self._make_ctx(SPARK))
+        gen.gen_rel(node)  # the conditions are typed against the table
         from wvlet_spark import acid
 
         if acid.supports_sql_delete(self.spark, table):
@@ -1372,6 +1333,12 @@ def _parse_byte_conf(v) -> int | None:
     unit = m.group(2).rstrip("b")
     shift = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}[unit]
     return n << shift if n >= 0 else n
+
+
+def _schema(df) -> dict[str, str]:
+    """{column: Spark type simpleString} of a frame (its schema is cached
+    on the frame, so no JVM call beyond what `df.columns` makes)."""
+    return {f.name: f.dataType.simpleString() for f in df.schema.fields}
 
 
 def _tree_contains(rel, types: tuple) -> bool:
