@@ -164,36 +164,29 @@ def _canaried_duck(sf_dir: str, sf: float, oracles: dict[str, str],
                   "companion_ref": ref, "canary_attempts": attempts}
 
 
-def _measure_spark(spark, sf_dir: str, names: list[str],
-                   repeats: int) -> tuple[dict[str, float], float | None]:
+def _measure_spark(spark, sf_dir: str, names: list[str], repeats: int
+                   ) -> tuple[dict[str, float], float | None, dict[str, int]]:
     from wvlet_spark import WvletSession
     from wvlet_spark.ops import entry_queries
     from wvlet_spark.suite import SUITE
 
     ws = WvletSession(spark, table_dir=sf_dir, test_mode=False)
     ext = entry_queries()
+    pinned: dict[str, int] = {}  # per query: RDDs left once its scope closed
 
     def run_once(name: str) -> None:
-        if name in SUITE:
-            df = ws.run(SUITE[name][0])
-        else:
-            df = ext[name](spark, sf_dir)
-        # noop sink: computes EVERY column of every row and discards it
-        # (optimization guide §1.4).  The previous count() action let
-        # Catalyst prune un-counted work — aggregate expressions under a
-        # group-by count, projection-only ops entirely (SCALE.md §29) —
-        # so e.g. tpch_q1 timed 0.15 s under count() vs 0.67 s fully
-        # materialized at sf0.1 (round-9 A/B, OPTIMIZATION_r09.md).  The
-        # DuckDB companion always materialized (fetchall), so this also
-        # makes the ratio apples-to-apples.  Old-methodology numbers are
-        # preserved in BENCH_r01..r08 and the round-9 A/B table.
-        df.write.format("noop").mode("overwrite").save()
-        # release intermediates the query materialized (minhash
-        # localCheckpoints its signature table): leaving them pinned
-        # squeezes execution memory and makes later big-join queries spill
-        # (measured: q18 2.1s -> 3.7s at sf1 with 4 stale checkpoints).
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        # the scope frees the query's cuts (minhash checkpoints its
+        # signature table): stale ones squeeze execution memory and make
+        # later big-join queries spill (q18 2.1s -> 3.7s at sf1 with 4)
+        with ws.scope():
+            df = (ws.run(SUITE[name][0]) if name in SUITE
+                  else ext[name](spark, sf_dir))
+            # noop sink: computes EVERY column of every row and discards it
+            # (optimization guide §1.4), as the DuckDB companion's fetchall
+            # does; count() let Catalyst prune un-counted work (tpch_q1
+            # 0.15 vs 0.67 s at sf0.1, OPTIMIZATION_r09.md)
+            df.write.format("noop").mode("overwrite").save()
+        pinned[name] = len(spark.sparkContext._jsc.getPersistentRDDs())
 
     def flush_shuffles() -> None:
         # finished-job shuffle files persist in spark.local.dir until the
@@ -235,7 +228,7 @@ def _measure_spark(spark, sf_dir: str, names: list[str],
             rechecks.append(time.perf_counter() - t0)
         base = max(per_query[fastest], 1e-6)
         canary_ratio = round(min(rechecks) / base, 3)
-    return per_query, canary_ratio
+    return per_query, canary_ratio, pinned
 
 
 def _sf1_dir() -> str | None:
@@ -301,8 +294,8 @@ def main() -> None:
 
     steal_mon = _StealMonitor()
     spark = _make_spark(sf_dir, cpus)
-    per_query, spark_canary = _measure_spark(spark, sf_dir, HEADLINE,
-                                             REPEATS)
+    per_query, spark_canary, pinned = _measure_spark(spark, sf_dir,
+                                                     HEADLINE, REPEATS)
     steal_permille = steal_mon.permille()
     total = round(sum(per_query.values()), 4)
 
@@ -324,6 +317,7 @@ def main() -> None:
         # >~50 means the host was preempting our vCPUs and timings are
         # inflated (GC-sync amplification, see _StealMonitor)
         "steal_permille": steal_permille,
+        "pinned_rdds": pinned,  # per query, once its scope has closed
         **canary,
     }
 
@@ -366,6 +360,7 @@ def main() -> None:
                 "companion_ref": inner.get("companion_ref"),
                 "spark_canary": inner.get("spark_canary"),
                 "steal_permille": inner.get("steal_permille"),
+                "pinned_rdds": inner.get("pinned_rdds"),
             }
         except Exception as ex:
             out["sf1"] = {"error": str(ex)[:200]}

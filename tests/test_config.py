@@ -4,6 +4,7 @@ module builds a session."""
 
 from __future__ import annotations
 
+import inspect
 import os
 import re
 import subprocess
@@ -107,6 +108,25 @@ def test_only_the_engine_builds_a_spark_session():
                     if builder.search(f.read()):
                         found.append(os.path.relpath(path, ROOT))
     assert found == []
+
+
+def test_only_session_checkpoint_cuts_lineage():
+    """Every lineage cut in the engine goes through `session.checkpoint`,
+    which hands it to the scope that frees it."""
+    from wvlet_spark import session
+
+    cut = re.compile(r"localCheckpoint\(")
+    found = {}
+    for top, _dirs, files in os.walk(os.path.join(ROOT, "wvlet_spark")):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(top, name)
+                with open(path, encoding="utf-8") as f:
+                    n = len(cut.findall(f.read()))
+                if n:
+                    found[os.path.relpath(path, ROOT)] = n
+    assert found == {os.path.join("wvlet_spark", "session.py"): len(
+        cut.findall(inspect.getsource(session.checkpoint)))}
 
 
 def test_config_loads_no_pyspark():

@@ -1037,6 +1037,21 @@ def test_rollup_derived_key_via_add(ws, duck):
                "agg n = _.count")
 
 
+def test_select_item_named_as_its_sql_names_it(ws, duck):
+    """The columns a projection records are the names its SQL gives: an
+    unaliased cast is named by its DuckDB rendering, not after its
+    operand, and a positional group key `_1` by the key."""
+    for q, cols in [("from nation select n_nationkey::double, n_name "
+                     "| select columns_matching('^n_')", ["n_name"]),
+                    ("from nation group by n_regionkey select _1, "
+                     "n = _.count | select columns_matching('region')",
+                     ["n_regionkey"])]:
+        df = ws.run(q)
+        got = sorted(tuple(r) for r in df.collect())
+        assert got == sorted(duck.execute(ws.oracle_sql(q)).fetchall())
+        assert df.columns == cols and len(got) > 0
+
+
 def test_natural_join_native(ws):
     """`natural [left] join` is a first-class pipe (round 5): shared
     columns join implicitly and appear once in the output."""

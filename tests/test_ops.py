@@ -243,8 +243,12 @@ def test_video_frame_sampling_plumbing(spark):
 
 
 def test_connected_components_shapes(spark):
-    """Chain, clique, and isolated nodes all land in the right component."""
+    """Chain, clique, and isolated nodes all land in the right component.
+    A long chain takes one round per node: each superseded label table
+    and the edge table are freed, so only the returned labels stay
+    pinned, and nothing once the caller's scope closes."""
     from wvlet_spark.ops.graph import connected_components
+    from wvlet_spark.session import RunScope
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4),        # chain: diameter > 1
@@ -254,6 +258,20 @@ def test_connected_components_shapes(spark):
     got = {r.id: r.comp for r in connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1,
                    10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+
+    def pinned() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(100, 111)],
+                                  ["id_a", "id_b"])
+    before = pinned()
+    got = {r.id: r.comp for r in connected_components(chain).collect()}
+    assert got == {i: 100 for i in range(100, 112)}
+    assert len(pinned() - before) <= 1
+    before = pinned()
+    with RunScope():
+        assert connected_components(chain).count() == 12
+    assert pinned() <= before
 
 
 def test_dup_clusters_vs_oracle(spark):

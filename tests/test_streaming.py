@@ -5,6 +5,12 @@ import pytest
 from tests.conftest import SF_SMALL
 
 
+def _pinned(spark) -> set:
+    """Ids of the RDDs pinned now (a set, so a ContextCleaner pass while
+    a stream runs can only shrink it)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
 @pytest.fixture()
 def ws(spark):
     from wvlet_spark import WvletSession
@@ -181,6 +187,7 @@ def test_windowed_agg_stream_incremental_parity(spark, tmp_path):
     first, second = ev.limit(total // 2), ev.subtract(ev.limit(total // 2))
 
     first.write.parquet(src)
+    pinned = _pinned(spark)
     q = windowed_agg_stream(spark, src, tgt, ckp, ts_col="ts",
                             window="1 day", group_cols=["event_type"],
                             value_col="value", watermark_delay="365 days")
@@ -192,6 +199,7 @@ def test_windowed_agg_stream_incremental_parity(spark, tmp_path):
                              window="1 day", group_cols=["event_type"],
                              value_col="value", watermark_delay="365 days")
     q2.awaitTermination(120)
+    assert _pinned(spark) <= pinned  # each batch's scope freed its cut
     # only the delta was read on the second run (checkpoint carried state)
     progress = q2.lastProgress
     if progress:  # availableNow may report multiple batches; sum inputs
@@ -264,9 +272,11 @@ def test_enriched_agg_stream_batch_parity(spark, tmp_path):
     cust = read_parquet_robust(spark, f"{SF_SMALL}/customer.parquet")
     ev.write.parquet(src)
 
+    pinned = _pinned(spark)
     q = enriched_agg_stream(spark, src, cust, tgt, ckp,
                             watermark_delay="365 days")
     q.awaitTermination(120)
+    assert _pinned(spark) <= pinned
 
     got = {
         (r.window_start, r.c_mktsegment):
@@ -284,7 +294,8 @@ def test_enriched_agg_stream_batch_parity(spark, tmp_path):
 def test_near_dup_filter_stream_matches_batch(spark, tmp_path):
     """Dedup-on-ingest parity: the micro-batched stream (band store of all
     seen docs + in-batch smaller-id check) admits EXACTLY the docs the
-    order-independent batch rule admits, collision chains included."""
+    order-independent batch rule admits, collision chains included, over
+    three micro-batches that leave nothing pinned."""
     from pyspark.sql import functions as F
 
     from tests.conftest import SF_DIR
@@ -298,14 +309,18 @@ def test_near_dup_filter_stream_matches_batch(spark, tmp_path):
                    near_dup_filter_batch(docs).select("doc_id").collect())
     src = str(tmp_path / "src")
     ids = [r.doc_id for r in docs.select("doc_id").collect()]
-    half = len(ids) // 2
-    for i, chunk in enumerate((ids[:half], ids[half:])):
+    third = len(ids) // 3
+    for i, chunk in enumerate((ids[:third], ids[third:2 * third],
+                               ids[2 * third:])):
         (docs.filter(F.col("doc_id").isin(chunk)).coalesce(1)
          .write.mode("append" if i else "overwrite").parquet(src))
+    pinned = _pinned(spark)
     q = near_dup_filter_stream(
         spark, src, str(tmp_path / "tgt"), str(tmp_path / "store"),
         str(tmp_path / "ckpt"), max_files_per_trigger=1)
     q.awaitTermination(120)
+    assert _pinned(spark) <= pinned
+    assert len(q.recentProgress) >= 3
     s_ids = sorted(r.doc_id for r in
                    spark.read.parquet(str(tmp_path / "tgt"))
                    .select("doc_id").collect())

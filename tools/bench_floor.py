@@ -46,7 +46,6 @@ def _min_of(fn, n: int) -> float:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     repeats = int(os.environ.get("SPARK_GRAFT_REPEATS", "3"))
 
     import bench
@@ -56,7 +55,7 @@ def main() -> None:
     from wvlet_spark.ops import entry_queries
     from wvlet_spark.suite import SUITE
 
-    spark = bench._make_spark(sf_dir, cpus)
+    spark = bench._make_spark(sf_dir)
     ws = WvletSession(spark, table_dir=sf_dir, test_mode=False)
     ext = entry_queries()
 

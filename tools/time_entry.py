@@ -32,8 +32,7 @@ def main() -> None:
     import bench
     import __spark_entry__ as entry
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = bench._make_spark(sf_dir, cpus)
+    spark = bench._make_spark(sf_dir)
     fn = entry.queries()[name]
 
     def run_once() -> None:

@@ -31,8 +31,7 @@ def main() -> None:
     from wvlet_spark import WvletSession
     from wvlet_spark.suite import SUITE
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = bench._make_spark(sf_dir, cpus)
+    spark = bench._make_spark(sf_dir)
     ws = WvletSession(spark, table_dir=sf_dir, test_mode=False)
     sql = ws.compile_to_sql(SUITE[name][0])
     spark.sql(sql).count()                 # warm-up, untimed

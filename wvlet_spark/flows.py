@@ -40,6 +40,7 @@ from dataclasses import dataclass, field
 
 from wvlet_spark import nodes as N
 from wvlet_spark.analyzer import cte_names, transform, walk
+from wvlet_spark.session import RunScope, _current, checkpoint
 
 # terminal stage states — lowercase vocabulary matches the reference's
 # run-summary output (spec/basic/flow-run.wv: success/failed/skipped;
@@ -702,8 +703,10 @@ class FlowExecutor:
 
     def _materialize(self, run_id: str, name: str, df):
         """Stage output: cache + register under the run-scoped name only;
-        downstream reads are rewritten through _scope_ref."""
-        df = df.localCheckpoint()  # eager: compute once, truncate lineage
+        downstream reads are rewritten through _scope_ref.  `resume` reads
+        it later, so its cut goes to a scope nobody closes."""
+        with _current(RunScope()):
+            df = checkpoint(df, eager=True)  # compute once, truncate lineage
         df.createOrReplaceTempView(self._stage_table(run_id, name))
 
     def _finish(self, run_id, flow, sr: _StageRun):

@@ -1016,7 +1016,7 @@ class SqlGenerator:
                     names.extend(cm)
                     continue
                 sel_items.append(self._select_item(it, group_keys=b.group_keys))
-                names.append(self._item_name(it))
+                names.append(self._item_name(it, b.group_keys))
             b.select = sel_items
             b.columns = names
             # an output column keeps a type only as a bare-column key
@@ -1218,30 +1218,25 @@ class SqlGenerator:
         return cols
 
     def _select_item(self, it: N.NamedExpr, group_keys=None) -> str:
-        # a bare identifier naming an aliased group key resolves to that
-        # key's expression (`group by y = f(x) select y, ...`)
-        if group_keys and isinstance(it.expr, N.Ident):
-            for k in group_keys:
-                if k.alias and k.alias == it.expr.name:
-                    ksql = self.expr(k.expr)
-                    return f"{ksql} AS {self.q(it.alias or k.alias)}"
-            # positional grouping-key refs `_1 _2 ...`
-            m = re.fullmatch(r"_(\d+)", it.expr.name)
-            if m and 1 <= int(m.group(1)) <= len(group_keys):
-                k = group_keys[int(m.group(1)) - 1]
-                ksql = self.expr(k.expr)
-                name = it.alias or k.alias or self._derived_name(k.expr)
-                return f"{ksql} AS {self.q(name)}"
-        sql = self.expr(it.expr)
-        name = it.alias
-        if name:
-            return f"{sql} AS {self.q(name)}"
-        if not isinstance(it.expr, (N.Ident, N.Ref, N.Star)):
-            # unaliased expressions are named by their DuckDB-dialect text —
-            # the reference's output naming (spec/basic/string-concat.wv
-            # expects a column literally called `concat('hello', ' wvlet!')`)
-            return f"{sql} AS {self.q(self._display_name(it.expr))}"
+        key = self._group_key(it, group_keys)
+        sql = self.expr(key.expr if key else it.expr)
+        if key or it.alias or not isinstance(it.expr, (N.Ident, N.Ref, N.Star)):
+            return f"{sql} AS {self.q(self._item_name(it, group_keys))}"
         return sql
+
+    @staticmethod
+    def _group_key(it: N.NamedExpr, group_keys) -> N.NamedExpr | None:
+        """The group key a bare identifier names: an aliased key's alias
+        (`group by y = f(x) select y, ...`), else a positional `_1 _2 ...`."""
+        if not group_keys or not isinstance(it.expr, N.Ident):
+            return None
+        for k in group_keys:
+            if k.alias and k.alias == it.expr.name:
+                return k
+        m = re.fullmatch(r"_(\d+)", it.expr.name)
+        if m and 1 <= int(m.group(1)) <= len(group_keys):
+            return group_keys[int(m.group(1)) - 1]
+        return None
 
     def _display_name(self, e: N.Expr) -> str:
         """Reference-style auto-name: the DuckDB rendering of the expression."""
@@ -1253,12 +1248,19 @@ class SqlGenerator:
         except Exception:
             return self.expr(e)
 
-    def _item_name(self, it) -> str:
+    def _item_name(self, it, group_keys=None) -> str:
+        """The output name of select item `it`, the one its SQL gives it."""
         if isinstance(it, N.Star):
             return "*"
-        if it.alias:
-            return it.alias
-        return self._derived_name(it.expr)
+        key = self._group_key(it, group_keys)
+        if it.alias or key:
+            return it.alias or key.alias or self._derived_name(key.expr)
+        if isinstance(it.expr, (N.Ident, N.Ref, N.Star)):
+            return self._derived_name(it.expr)
+        # unaliased expressions are named by their DuckDB-dialect text —
+        # the reference's output naming (spec/basic/string-concat.wv
+        # expects a column literally called `concat('hello', ' wvlet!')`)
+        return self._display_name(it.expr)
 
     def _derived_name(self, e: N.Expr) -> str:
         # asof right-side mangling never leaks into OUTPUT names
@@ -1693,7 +1695,8 @@ class SqlGenerator:
             vname = str(v.value) if isinstance(v, N.Literal) else self.expr(v)
             for it in agg_items:
                 fn_sql = self._conditional_agg(it.expr, f"({pivot_sql} = {vsql})")
-                label = vname if len(agg_items) == 1 else f"{vname}_{self._item_name(it)}"
+                label = vname if len(agg_items) == 1 else \
+                    f"{vname}_{it.alias or self._derived_name(it.expr)}"
                 sel.append(f"{fn_sql} AS {self.q(label)}")
                 names.append(label)
         b.group_keys = list(group_by)

@@ -17,6 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from wvlet_spark.session import checkpoint
+
 
 def _tokens(text_col: str):
     return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
@@ -381,9 +383,9 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str = "text", id_col: str = 
     # materialize signatures once — the self-join below would otherwise
     # recompute the signature fold on both sides (2x the dominant cost);
     # at cluster scale this is "write signatures, then join", same idea
-    sigs = minhash_signatures(
+    sigs = checkpoint(minhash_signatures(
         df, text_col, id_col, num_hashes, shingle_k,
-        impl="portable" if portable else "fast").localCheckpoint()
+        impl="portable" if portable else "fast"), eager=True)
     # banded rows carry ONLY (id, band, bucket) — shuffling the 64-slot
     # signature array through the self-join would move ~8x more bytes than
     # the ids; signatures are re-attached to the surviving candidate pairs
@@ -443,7 +445,7 @@ def minhash_near_dup_pairs(df: DataFrame, text_col: str = "text", id_col: str = 
     # lineage and the pairs entry went 1.7 s -> 2.2 s, ngram verify
     # 1.2 s -> 2.9 s — multi-consumer checkpoints stay eager at every
     # scale.)
-    cand = cand.localCheckpoint()
+    cand = checkpoint(cand, eager=True)
     cand = (
         cand
         .join(sigs.select(F.col(id_col).alias("id_a"),
@@ -586,8 +588,8 @@ def simhash_near_dup_pairs_portable(df: DataFrame, text_col: str = "text",
     # full width: the banded self-join below amplifies compute beyond
     # input bytes (wide rationale in ops/util.py)
     from wvlet_spark.ops.util import ensure_map_parallelism
-    sh = simhash_portable(ensure_map_parallelism(df, wide=True),
-                          text_col, id_col, bits).localCheckpoint()
+    sh = checkpoint(simhash_portable(ensure_map_parallelism(df, wide=True),
+                                     text_col, id_col, bits), eager=True)
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -653,12 +655,12 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "do
         # candidate pair: the n-gram string construction is the expensive
         # part and must not run over the full corpus twice (measured 42s
         # -> ~2s at sf1 for ~500 candidate docs of 50k)
-        candidates = candidates.select("id_a", "id_b").localCheckpoint()
+        candidates = checkpoint(candidates.select("id_a", "id_b"), eager=True)
         ids = (candidates.select(F.col("id_a").alias(id_col))
                .union(candidates.select(F.col("id_b").alias(id_col)))
                .distinct())
         need = df.join(ids, id_col, "left_semi")
-        g = need.select(F.col(id_col), grams.alias("g")).localCheckpoint()
+        g = checkpoint(need.select(F.col(id_col), grams.alias("g")), eager=True)
         pairs = (
             candidates
             .join(g.select(F.col(id_col).alias("id_a"), F.col("g").alias("__ga")), "id_a")

@@ -11,16 +11,18 @@ its neighbors; converges in O(graph diameter) rounds.  Duplicate clusters
 are near-cliques (diameter 1-2 in practice), so the loop exits after 2-3
 rounds; `max_iter` bounds pathological chain graphs.  Each round is one
 shuffle of (node, label) pairs — edges are never re-materialized — and
-intermediate label tables are localCheckpointed so the lineage (and the
-plan Spark must re-optimize) stays flat across iterations.  This is the
-standard label-propagation formulation of connected components used by
-large-scale dedup pipelines (cf. the alternating-star algorithms in the
-MapReduce CC literature).
+label tables are checkpointed (each freed once its successor is), so the
+lineage and the plan stay flat across iterations.  This is the standard
+label-propagation formulation of connected components used by large-scale
+dedup pipelines (cf. the alternating-star algorithms in the MapReduce CC
+literature).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from wvlet_spark.session import checkpoint, release
 
 
 def connected_components(edges: DataFrame, src: str = "id_a",
@@ -41,20 +43,19 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     # the per-round min, never a different answer), and every caller
     # emits unique (id_a < id_b) pairs — the previous `.distinct()` paid
     # a full extra shuffle of the edge table for nothing (round 9).
-    e = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-         .repartition("b")
-         .sortWithinPartitions("b")
-         .localCheckpoint(eager=False))
+    e = checkpoint(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        .repartition("b")
+        .sortWithinPartitions("b"))
     # Initial labels already carry the FIRST propagation round: with
     # identity labels, round 1 assigns every node min(self, neighbors),
     # which is exactly min(a, min b) over its edge rows — an aggregate
     # over the edge table with no join.  Fusing it into initialization
     # replaces the old identity-label `distinct` AND removes one full
     # edge-join round from the loop at every scale (round 9).
-    labels = (e.groupBy(F.col("a").alias("id"))
-              .agg(F.min(F.least("a", "b")).alias("comp"))
-              .localCheckpoint(eager=False))
+    labels = checkpoint(e.groupBy(F.col("a").alias("id"))
+                        .agg(F.min(F.least("a", "b")).alias("comp")))
     # Convergence test: labels only ever DECREASE, so the label sum is
     # strictly monotone and "sum unchanged" <=> "no node changed" —
     # exact, and one tiny aggregate instead of the previous
@@ -66,22 +67,25 @@ def connected_components(edges: DataFrame, src: str = "id_a",
         F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
     ).collect()[0]["s"]
     if prev_sum is None:  # empty edge table -> no labels to propagate
+        release(e)
         return labels
     for _ in range(max_iter):
         # neighbor labels: for each edge a->b, b's current label is a
         # candidate for a
         nbr = (e.join(labels.withColumnRenamed("id", "b"), "b")
                .select(F.col("a").alias("id"), "comp"))
-        new_labels = (labels.select("id", "comp").union(nbr)
-                      .groupBy("id").agg(F.min("comp").alias("comp"))
-                      .localCheckpoint(eager=False))
+        new_labels = checkpoint(labels.select("id", "comp").union(nbr)
+                                .groupBy("id")
+                                .agg(F.min("comp").alias("comp")))
         s = new_labels.agg(
             F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
+        release(labels)
         labels = new_labels
         if s == prev_sum:
             break
         prev_sum = s
+    release(e)
     return labels
 
 

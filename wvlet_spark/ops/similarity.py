@@ -25,6 +25,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve at import
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, LongType
 
+from wvlet_spark.session import checkpoint
+
 # NB: module-level pandas_udfs must use DataType instances, not DDL strings —
 # string return types are parsed eagerly and need an active SparkContext,
 # which does not exist when the executor-side Python worker imports this
@@ -274,7 +276,7 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.4,
         v = rp_lsh_buckets(v, dim, planes, seed, "__v").withColumnRenamed("lsh_bucket", "__b")
     # signatures/norms are cheap but feed both consumers of the blocked
     # pair pass (group-size probe + block aggregate) — materialize once
-    v = v.localCheckpoint()
+    v = checkpoint(v, eager=True)
     # blocked pair pass (see _blocked_pair_cos): same pair set and the
     # same float64 arithmetic as the old l-join-r + _pair_dot_udf form,
     # but vectors cross the Arrow boundary per BLOCK, not per pair; the
@@ -669,7 +671,7 @@ def semantic_dedup(df: DataFrame, n_clusters: int = 16,
             F.col(vec_col).cast("array<double>").alias("__v")), C, "__v")
          .withColumnRenamed("ivf_cluster", "sem_cluster")
          .withColumn("__n", _norm_udf(F.col("__v"))))
-    v = v.localCheckpoint()
+    v = checkpoint(v, eager=True)
     if pair_strategy == "grouped":
         return _semantic_dedup_grouped(v, threshold, id_col,
                                        max_group_rows=max_group_rows)

@@ -6,6 +6,8 @@ from collections import OrderedDict
 
 from pyspark.sql import DataFrame
 
+from wvlet_spark import session
+
 # bytes of estimated input per map task when widening an under-split scan
 # (ensure_map_parallelism).  1 MB of (compressed, footer-estimated) input
 # per task keeps toy-scale graded runs from paying 32 task launches for
@@ -100,14 +102,15 @@ def plan_estimated_bytes(df: DataFrame) -> int | None:
 
 
 def materialize_if_big(df: DataFrame, input_df: DataFrame) -> DataFrame:
-    """localCheckpoint `df` only when `input_df` is big enough for the
+    """Eagerly checkpoint `df` only when `input_df` is big enough for the
     recompute-avoidance to matter (see _MATERIALIZE_MIN_MB).  Unknown
     size = big (materialize): the checkpoint is the safe default at
-    scale, skipping it is the toy-scale optimization."""
+    scale, skipping it is the toy-scale optimization.  The caller's scope
+    (a server request, `with ws.scope():`) frees the cut on close."""
     est = plan_estimated_bytes(input_df)
     if est is not None and est < _MATERIALIZE_MIN_MB * 1024 * 1024:
         return df
-    return df.localCheckpoint()
+    return session.checkpoint(df, eager=True)
 
 
 def let1(col, fn):
@@ -177,7 +180,7 @@ def sort_once(df: DataFrame, *cols, checkpoint: bool = True) -> DataFrame:
     either way — that equivalence is itself pytest-pinned."""
     if not SORT_ONCE_CHECKPOINT or not checkpoint:
         return df.orderBy(*cols)
-    return df.localCheckpoint(eager=False).orderBy(*cols)
+    return session.checkpoint(df).orderBy(*cols)
 
 
 SORT_ONCE_CHECKPOINT = True

@@ -16,7 +16,7 @@ from __future__ import annotations
 import itertools
 import os
 import re
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from contextvars import ContextVar
 
 from wvlet_spark import nodes as N
@@ -35,18 +35,19 @@ _SCOPES: ContextVar[tuple[RunScope, ...]] = ContextVar("_SCOPES", default=())
 
 
 class RunScope:
-    """Everything one run creates: the views and lineage-cutting
-    checkpoints it staged, its `test` results, and `sql`, the Spark SQL of
-    the last query statement it ran.
+    """Everything one run creates: the views it staged, the lineage cuts
+    `checkpoint` made while it was the innermost open scope (the ops'
+    too), its `test` results, and `sql`, the Spark SQL of its last query.
 
     `with ws.scope() as s: rows = ws.run(q).collect()` — runs of `ws`
     inside the block stage into `s`; closing it drops the staged views,
-    unpersists exactly the RDDs this scope checkpointed and forgets their
-    cached schemas, so concurrent runs of one session neither see nor free
-    each other's state.  Collect inside the block: a frame that reads one
-    of the scope's checkpoints fails once it is unpersisted."""
+    unpersists exactly the RDDs of its cuts and forgets their cached
+    schemas, so concurrent runs of one session neither see nor free each
+    other's state.  Collect inside the block: a frame that reads one of
+    the scope's cuts fails once it is unpersisted.  Only `stage` needs
+    the session: `with RunScope():` owns a streaming batch's cuts."""
 
-    def __init__(self, session: WvletSession, test_mode: bool):
+    def __init__(self, session: WvletSession | None = None, test_mode: bool = False):
         self.session = session
         self.test_mode = test_mode
         self.test_results: list[tuple[bool, str]] = []
@@ -58,13 +59,9 @@ class RunScope:
         self._rdds: list = []
         self._tokens: list = []
 
-    def stage(self, df, kind: str, checkpoint: bool = False) -> str:
+    def stage(self, df, kind: str) -> str:
         """Register `df` as the temp view `__wv_<kind>_<n>`, owned by this
-        scope; `checkpoint` first cuts its lineage with a lazy
-        localCheckpoint (computed once, on first use)."""
-        if checkpoint:
-            df = df.localCheckpoint(eager=False)
-            self._rdds.append(df._jdf.logicalPlan().rdd())
+        scope."""
         view = f"__wv_{kind}_{next(_VIEW_IDS)}"
         df.createOrReplaceTempView(view)
         self.views.append(view)
@@ -117,6 +114,21 @@ def _current(scope: RunScope):
         yield scope
     finally:
         _SCOPES.reset(token)
+
+
+def checkpoint(df, eager: bool = False):
+    """The engine's one lineage cut, owned by the innermost open scope,
+    which unpersists it on close; outside any scope it lives until Spark's
+    ContextCleaner reaps it.  A lazy cut is computed by its first job."""
+    df = df.localCheckpoint(eager)
+    if _SCOPES.get():
+        _SCOPES.get()[-1]._rdds.append(df._jdf.logicalPlan().rdd())
+    return df
+
+
+def release(df) -> None:
+    """Unpersist a `checkpoint` cut now; a frame still reading it fails."""
+    df._jdf.logicalPlan().rdd().unpersist(False)
 
 
 class WvletSession:
@@ -980,8 +992,8 @@ class WvletSession:
                 return e
             try:
                 sub_sql = self._gen_sql(e.query, SPARK, params=params)
-                view = self._scope().stage(self.spark.sql(sub_sql), "insub",
-                                           checkpoint=True)
+                view = self._scope().stage(
+                    checkpoint(self.spark.sql(sub_sql)), "insub")
             except Exception:
                 return e
             return N.InSubquery(e.expr, N.TableRef(view), e.negated)
@@ -1066,8 +1078,8 @@ class WvletSession:
                 continue
             try:
                 sub_sql = self._gen_sql(q, SPARK, params=params)
-                view = self._scope().stage(self.spark.sql(sub_sql), "cte",
-                                           checkpoint=True)
+                view = self._scope().stage(
+                    checkpoint(self.spark.sql(sub_sql)), "cte")
             except Exception:
                 kept_defs.append((name, q))
                 continue
@@ -1296,15 +1308,17 @@ class WvletSession:
             return None
         keep = " AND ".join(f"NOT ({gen.expr(c)})" for c in conds) if conds else "FALSE"
         remaining = self.spark.sql(f"SELECT * FROM {table} WHERE {keep}")
-        # Break plan lineage before overwriting the relation we read from:
-        # cache() keeps the logical plan (Spark rejects overwrite-while-read,
-        # and a temp view would shadow the written table entirely).
-        remaining = remaining.localCheckpoint(eager=True)
         is_temp = False
         try:
             is_temp = self.spark.catalog.getTable(table).tableType == "TEMPORARY"
         except Exception:
             pass
+        # Break plan lineage before overwriting the relation we read from:
+        # cache() keeps the logical plan (Spark rejects overwrite-while-read,
+        # and a temp view would shadow the written table entirely).  A temp
+        # view reads the cut after this statement: no scope may free it.
+        with _current(RunScope()) if is_temp else nullcontext():
+            remaining = checkpoint(remaining, eager=True)
         if is_temp:
             remaining.createOrReplaceTempView(table)
         else:

@@ -19,6 +19,7 @@ import re
 
 from wvlet_spark import nodes as N
 from wvlet_spark.generator import CompileError
+from wvlet_spark.session import RunScope, checkpoint
 
 _DURATION_RE = re.compile(r"^(\d+(?:\.\d+)?)\s*(ms|s|m|h|d|w)$")
 
@@ -280,7 +281,7 @@ def _upsert_stream(agg, keys: list[str], target_path: str,
         if batch_df.isEmpty():
             return
         sess = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()
+        batch_df = checkpoint(batch_df, eager=True)
         if target_table is not None:
             from wvlet_spark import acid
 
@@ -306,10 +307,18 @@ def _upsert_stream(agg, keys: list[str], target_path: str,
 
     writer = (agg.writeStream.outputMode("update")
               .option("checkpointLocation", checkpoint_path)
-              .foreachBatch(merge))
+              .foreachBatch(_scoped(merge)))
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def _scoped(body):
+    """Run each micro-batch of `body` in a RunScope that frees its cuts."""
+    def run(batch_df, batch_id):
+        with RunScope():
+            body(batch_df, batch_id)
+    return run
 
 
 def read_stream(spark, table_or_path: str, watermark_column: str | None = None,
@@ -426,7 +435,7 @@ def near_dup_filter_batch(df, text_col: str = "text", id_col: str = "doc_id",
 
     banded = minhash_bands_portable(df, text_col, id_col,
                                     num_hashes, bands, shingle_k, family)
-    banded = banded.localCheckpoint()  # feeds both sides of the self-join
+    banded = checkpoint(banded, eager=True)  # feeds both self-join sides
     dup = (banded.alias("a")
            .join(banded.alias("b"),
                  on=[F.col("a.band") == F.col("b.band"),
@@ -476,10 +485,10 @@ def near_dup_filter_stream(spark, source_path: str, target_path: str,
         if batch_df.isEmpty():
             return
         sess = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()
-        banded = minhash_bands_portable(
+        batch_df = checkpoint(batch_df, eager=True)
+        banded = checkpoint(minhash_bands_portable(
             batch_df, text_col, id_col, num_hashes, bands,
-            shingle_k, family).localCheckpoint()
+            shingle_k, family), eager=True)
         dup_ids = None
         if os.path.isdir(band_store_path):
             # store carries its own id column — keep only the bucket keys
@@ -502,7 +511,7 @@ def near_dup_filter_stream(spark, source_path: str, target_path: str,
 
     writer = (stream.writeStream
               .option("checkpointLocation", checkpoint_path)
-              .foreachBatch(step))
+              .foreachBatch(_scoped(step)))
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
